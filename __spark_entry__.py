@@ -673,7 +673,6 @@ def _docs_incremental_dedup(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     table = f"inc_idx_{os.getpid()}"
-    build_minhash_index(d, table, n_buckets=8)
     clones = d.filter(F.col("doc_id") < 40).withColumn(
         "doc_id", F.col("doc_id") + F.lit(200000)
     )
@@ -684,12 +683,17 @@ def _docs_incremental_dedup(spark, sf_dir):
             "text", F.concat(F.col("text"), F.lit(" entirely novel suffix tokens"))
         )
     )
-    out = incremental_minhash_dedup(
-        spark, clones.unionByName(modified), table, d, threshold=1.0
-    )
-    return out.select(
-        "new_id", "corpus_id", F.round("jaccard", 4).alias("jaccard")
-    ).orderBy("new_id", "corpus_id")
+    try:
+        build_minhash_index(d, table, n_buckets=8)
+        out = incremental_minhash_dedup(
+            spark, clones.unionByName(modified), table, d, threshold=1.0
+        )
+        # materialized before the index table is dropped: the plan reads it
+        return out.select(
+            "new_id", "corpus_id", F.round("jaccard", 4).alias("jaccard")
+        ).orderBy("new_id", "corpus_id").localCheckpoint()
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def _docs_decontaminated(spark, sf_dir):
@@ -1441,10 +1445,13 @@ def _stream_dedup_kept(spark, sf_dir):
         )
         q.awaitTermination()
 
-    d.coalesce(1).write.mode("append").json(in_dir)
-    run()
-    b2.coalesce(1).write.mode("append").json(in_dir)
-    run()
+    try:
+        d.coalesce(1).write.mode("append").json(in_dir)
+        run()
+        b2.coalesce(1).write.mode("append").json(in_dir)
+        run()
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
     return spark.read.parquet(out_dir).select("doc_id").orderBy("doc_id")
 
 

@@ -22,3 +22,10 @@ the reference repo (cited by file:line in docstrings).
 """
 
 __version__ = "0.1.0"
+
+# every UDF the package ships unpickles through the package, so a Spark
+# Python worker installs the guard on its first task (see _worker.py)
+from . import _worker
+
+if _worker.in_spark_worker():
+    _worker.install()

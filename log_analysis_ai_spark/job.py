@@ -91,16 +91,18 @@ def run_checkpointed(
         parsed = parse(transcripts)
         t0 = time.time()
         assigned, templates, keyed = mine(parsed, cfg)
+        mine_s = round(time.time() - t0, 3)
+        store.write_table(assigned, "turns_parsed", fp)
+        # the catalog size comes from the committed snapshot's footers, not
+        # from a Spark job over the templates table
+        n_templates = store.write_table(templates, "templates", fp)["rows"]
         store.record(
             {
                 "stage": "mine_catalog", "fingerprint": fp, "run_id": "-",
-                "rows": templates.count(), "partitions": {},
-                "wall_s": round(time.time() - t0, 3), "status": "computed",
-                "ts": time.time(),
+                "rows": n_templates, "partitions": {},
+                "wall_s": mine_s, "status": "computed", "ts": time.time(),
             }
         )
-        store.write_table(assigned, "turns_parsed", fp)
-        store.write_table(templates, "templates", fp)
         keyed.unpersist()
     turns_parsed = store.read_table(spark, "turns_parsed")
     templates = store.read_table(spark, "templates")

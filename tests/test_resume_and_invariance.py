@@ -54,6 +54,10 @@ def test_resume_is_idempotent(spark, frames, tmp_path):
     out1 = run_checkpointed(spark, t, tool_l, role_l, store, CFG, input_desc="tiny")
     clean = _sink_counts(out1)
     n_lineage = len(store.lineage_rows())
+    # the mine_catalog row counts the committed catalog, <EMPTY> included
+    (mined,) = [r for r in store.lineage_rows() if r["stage"] == "mine_catalog"]
+    assert mined["rows"] == out1["templates"].count()
+    assert out1["templates"].filter(F.col("template_str") == "<EMPTY>").count() == 1
 
     # full re-run with resume: a no-op (no new lineage rows)
     out2 = run_checkpointed(spark, t, tool_l, role_l, store, CFG, resume=True, input_desc="tiny")

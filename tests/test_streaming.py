@@ -5,7 +5,9 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from log_analysis_ai_spark.config import PipelineConfig
@@ -468,7 +470,17 @@ def test_compact_and_restart_generation_loop(spark, tmp_path):
     assert allg.count() == 120 + 60 + 40
 
 
-def test_stream_incremental_dedup_across_batches_and_retry(spark, tmp_path):
+@pytest.fixture()
+def index_table(spark):
+    """A managed-table name of this run only, dropped at teardown even when
+    the test fails: a fixed name left behind by an interrupted run would be
+    appended to by the next one."""
+    name = f"t_stream_minhash_idx_{uuid.uuid4().hex[:12]}"
+    yield name
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_stream_incremental_dedup_across_batches_and_retry(spark, tmp_path, index_table):
     """Streaming corpus dedup against the growing persisted index:
     batch 1 dedupes within itself; batch 2 (a separate availableNow run
     over a new file) drops its clone-of-batch-1 doc and keeps novel docs;
@@ -495,8 +507,7 @@ def test_stream_incremental_dedup_across_batches_and_retry(spark, tmp_path):
     in_dir = str(tmp_path / "in"); os.makedirs(in_dir)
     out_dir = str(tmp_path / "corpus")
     ckpt = str(tmp_path / "ck")
-    idx = "t_stream_minhash_idx"
-    spark.sql(f"DROP TABLE IF EXISTS {idx}")
+    idx = index_table
 
     def write_file(name, rows):
         with open(f"{in_dir}/{name}", "w") as f:
@@ -569,7 +580,6 @@ def test_stream_incremental_dedup_across_batches_and_retry(spark, tmp_path):
         spark, probe2, 10, idx, out_dir, threshold=0.8, shingle_n=3
     )
     assert {r.doc_id for r in spark.read.parquet(out_dir).collect()} == {1, 3, 11}
-    spark.sql(f"DROP TABLE IF EXISTS {idx}")
 
 
 def test_stream_curate_rows_reasons_and_idempotency(spark, tmp_path):
