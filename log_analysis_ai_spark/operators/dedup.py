@@ -926,94 +926,9 @@ def c4_span_dedup(
     `compute_once`. Returns all original columns + clean_text +
     n_removed_sentences."""
     sent_re = r"[^.!?]+[.!?]+"
-    sents = F.regexp_extract_all(F.col(text_col), F.lit(sent_re), F.lit(0))
-    # widen BEFORE the materialized projection: the span hashing explode
-    # reads the checkpoint, so a one-row-group scan would otherwise hash
-    # the whole corpus in one task (no-op at cluster scale)
-    base = compute_once(
-        widen_if_narrow(df).select(F.col(id_col).alias("_id"), sents.alias("_sents")),
-        caches,
-    )
-    # span stream (r9): one per-sentence xxhash64 pass + the shared Arrow
-    # rolling-hash window builder (_window_hash_stream) — the exchange
-    # carries (_id, _si, _h) only, and hashing costs O(corpus chars)
-    # instead of O(span_sentences × corpus chars) of per-span concat+hash.
-    # Grouping is unchanged: a sentence sequence and its concatenation
-    # determine each other (sentences are the maximal `[^.!?]+[.!?]+` runs
-    # of the concatenation, a unique decomposition), so spans are equal
-    # iff their sentence-hash sequences are — the same equivalence classes
-    # either hash keys, up to the family's ~2^-64 collision odds, and the
-    # exact-text confirm below is unchanged.
-    ex = _window_hash_stream(
-        base.select(
-            "_id", F.transform("_sents", lambda s: F.xxhash64(s)).alias("_toks")
-        ),
-        span_sentences,
-    ).withColumnRenamed("_ti", "_si")
-    # one keeper row per DUPLICATED span hash; (id, position) is unique so
-    # the min(struct) order is total — partial_min absorbs hot spans map-side
-    keepers = (
-        ex.groupBy("_h")
-        .agg(F.min(F.struct("_id", "_si")).alias("_k"), F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > 1)
-        .select("_h", "_k")
-    )
-    span_at = lambda si: F.concat_ws(  # noqa: E731
-        "", F.slice(F.col("_sents"), si + 1, span_sentences)
-    )
-    cand = (
-        ex.join(keepers, "_h")
-        .filter(~((F.col("_id") == F.col("_k._id")) & (F.col("_si") == F.col("_k._si"))))
-        .join(base, "_id")
-        .select("_id", "_si", "_h", span_at(F.col("_si")).alias("_st"))
-    )
-    keeper_txt = (
-        keepers.select("_h", F.col("_k._id").alias("_id"), F.col("_k._si").alias("_si"))
-        .join(base, "_id")
-        .select("_h", span_at(F.col("_si")).alias("_kt"))
-    )
-    removed = (
-        cand.join(keeper_txt, "_h")
-        .filter(F.col("_st") == F.col("_kt"))  # exact-text confirm (collision guard)
-        .select(
-            "_id",
-            F.explode(
-                F.sequence(F.col("_si"), F.col("_si") + F.lit(span_sentences - 1))
-            ).alias("_ri"),
-        )
-        .groupBy("_id")
-        .agg(F.collect_set("_ri").alias("_removed"))
-    )
-    # reconstruction: `_snt` is materialized as a COLUMN so the lambdas
-    # below reference an attribute — referencing the regexp_extract_all
-    # expression inside them would re-extract the whole text once per
-    # sentence position (see bind_once)
-    out = df.join(removed, df[id_col] == removed["_id"], "left").withColumn(
-        "_snt", sents
-    )
-    st = F.col("_snt")
-    keep_idx = F.filter(
-        F.sequence(F.lit(1), F.greatest(F.size(st), F.lit(1))),
-        lambda i: (i <= F.size(st))
-        & (
-            F.col("_removed").isNull()
-            | ~F.array_contains("_removed", (i - 1).cast("int"))
-        ),
-    )
-    head = F.regexp_extract(F.col(text_col), r"^[.!?]+", 0)
-    sent_chars = F.aggregate(st, F.lit(0), lambda a, x: a + F.length(x))
-    body_chars = F.length(head) + sent_chars
-    tail = F.col(text_col).substr(
-        body_chars + 1, F.greatest(F.length(text_col) - body_chars, F.lit(0))
-    )
-    return out.select(
-        *[df[c] for c in df.columns],
-        F.concat(
-            head,
-            F.concat_ws("", F.transform(keep_idx, lambda i: F.element_at(st, i))),
-            tail,
-        ).alias("clean_text"),
-        F.coalesce(F.size("_removed"), F.lit(0)).alias("n_removed_sentences"),
+    return _window_dedup(
+        df, text_col, id_col, span_sentences,
+        sent_re, "", sent_re, r"^[.!?]+", "n_removed_sentences", caches,
     )
 
 
@@ -1084,6 +999,105 @@ def _window_hash_stream(base: DataFrame, W: int) -> DataFrame:
     return th.mapInPandas(_rolling_windows, schema=ex_schema)
 
 
+def _window_dedup(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    W: int,
+    unit_re: str,
+    joiner: str,
+    piece_re: str,
+    head_re: str,
+    count_col: str,
+    caches: list | None,
+) -> DataFrame:
+    """Keep-first dedup of every W-unit window, the core of c4_span_dedup
+    (sentence units) and substring_dedup (whitespace tokens).
+
+    Units are the `unit_re` matches of the text; windows are grouped by
+    the rolling hash of their unit sequence and confirmed by exact text
+    (units joined by `joiner`). The joined text determines the sequence
+    for both callers (sentences are the unique maximal-run decomposition
+    of their concatenation; tokens hold no space), so a hash collision
+    can only RETAIN an extra duplicate, never delete unique text.
+    `clean_text` is the `head_re` match at the start of the text, the
+    surviving `piece_re` matches (one piece per unit, each carrying the
+    text between units), then the tail after the last piece, verbatim.
+    Adds `count_col`, the number of units removed."""
+    # widen BEFORE the materialized projection: the rolling-hash window
+    # stream reads the checkpoint, so a one-row-group scan would otherwise
+    # run it as one task (no-op at cluster scale)
+    base = compute_once(
+        widen_if_narrow(df).select(
+            F.col(id_col).alias("_id"),
+            F.regexp_extract_all(F.col(text_col), F.lit(unit_re), F.lit(0)).alias("_toks"),
+        ),
+        caches,
+    )
+    ex = _window_hash_stream(base, W)
+    # one keeper per DUPLICATED window hash; (id, position) is unique so the
+    # min(struct) order is total — partial_min absorbs hot windows map-side
+    keepers = (
+        ex.groupBy("_h")
+        .agg(F.min(F.struct("_id", "_ti")).alias("_k"), F.count(F.lit(1)).alias("_n"))
+        .filter(F.col("_n") > 1)
+        .select("_h", "_k")
+    )
+    win_at = lambda ti: F.concat_ws(joiner, F.slice(F.col("_toks"), ti + 1, W))  # noqa: E731
+    cand = (
+        ex.join(keepers, "_h")
+        .filter(~((F.col("_id") == F.col("_k._id")) & (F.col("_ti") == F.col("_k._ti"))))
+        .join(base, "_id")
+        .select("_id", "_ti", "_h", win_at(F.col("_ti")).alias("_wt"))
+    )
+    keeper_txt = (
+        keepers.select("_h", F.col("_k._id").alias("_id"), F.col("_k._ti").alias("_ti"))
+        .join(base, "_id")
+        .select("_h", win_at(F.col("_ti")).alias("_kwt"))
+    )
+    removed = (
+        cand.join(keeper_txt, "_h")
+        .filter(F.col("_wt") == F.col("_kwt"))  # exact-text confirm (collision guard)
+        .select(
+            "_id",
+            F.explode(F.sequence(F.col("_ti"), F.col("_ti") + F.lit(W - 1))).alias("_ri"),
+        )
+        .groupBy("_id")
+        .agg(F.collect_set("_ri").alias("_removed"))
+    )
+    # reconstruction: `_pcs` is materialized as a COLUMN so the lambdas
+    # below reference an attribute — referencing the regexp_extract_all
+    # expression inside them would re-extract the whole text once per
+    # piece position (see bind_once; measured minutes → seconds on
+    # 600-token docs)
+    out = df.join(removed, df[id_col] == removed["_id"], "left").withColumn(
+        "_pcs", F.regexp_extract_all(F.col(text_col), F.lit(piece_re), F.lit(0))
+    )
+    pcs = F.col("_pcs")
+    keep_idx = F.filter(
+        F.sequence(F.lit(1), F.greatest(F.size(pcs), F.lit(1))),
+        lambda i: (i <= F.size(pcs))
+        & (
+            F.col("_removed").isNull()
+            | ~F.array_contains("_removed", (i - 1).cast("int"))
+        ),
+    )
+    head = F.regexp_extract(F.col(text_col), head_re, 0)
+    body_chars = F.length(head) + F.aggregate(pcs, F.lit(0), lambda a, x: a + F.length(x))
+    tail = F.col(text_col).substr(
+        body_chars + 1, F.greatest(F.length(text_col) - body_chars, F.lit(0))
+    )
+    return out.select(
+        *[df[c] for c in df.columns],
+        F.concat(
+            head,
+            F.concat_ws("", F.transform(keep_idx, lambda i: F.element_at(pcs, i))),
+            tail,
+        ).alias("clean_text"),
+        F.coalesce(F.size("_removed"), F.lit(0)).alias(count_col),
+    )
+
+
 def substring_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -1137,77 +1151,9 @@ def substring_dedup(
     driver state. `caches` as in `compute_once` (the token table is
     scanned by the explode and the two candidate-sized confirm joins).
     Returns all original columns + clean_text + n_removed_tokens."""
-    W = window_tokens
-    # widen BEFORE the materialized projection: the rolling-hash window
-    # stream reads the checkpoint, so a one-row-group scan would otherwise
-    # run it as one task (no-op at cluster scale)
-    base = compute_once(
-        widen_if_narrow(df).select(
-            F.col(id_col).alias("_id"),
-            F.regexp_extract_all(F.col(text_col), F.lit(r"\S+"), F.lit(0)).alias("_toks"),
-        ),
-        caches,
-    )
-    ex = _window_hash_stream(base, W)
-    # one keeper per DUPLICATED window hash; (id, position) is unique so the
-    # min(struct) order is total — partial_min absorbs hot windows map-side
-    keepers = (
-        ex.groupBy("_h")
-        .agg(F.min(F.struct("_id", "_ti")).alias("_k"), F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > 1)
-        .select("_h", "_k")
-    )
-    win_at = lambda ti: F.concat_ws(" ", F.slice(F.col("_toks"), ti + 1, W))  # noqa: E731
-    cand = (
-        ex.join(keepers, "_h")
-        .filter(~((F.col("_id") == F.col("_k._id")) & (F.col("_ti") == F.col("_k._ti"))))
-        .join(base, "_id")
-        .select("_id", "_ti", "_h", win_at(F.col("_ti")).alias("_wt"))
-    )
-    keeper_txt = (
-        keepers.select("_h", F.col("_k._id").alias("_id"), F.col("_k._ti").alias("_ti"))
-        .join(base, "_id")
-        .select("_h", win_at(F.col("_ti")).alias("_kwt"))
-    )
-    removed = (
-        cand.join(keeper_txt, "_h")
-        .filter(F.col("_wt") == F.col("_kwt"))  # exact-text confirm (collision guard)
-        .select(
-            "_id",
-            F.explode(F.sequence(F.col("_ti"), F.col("_ti") + F.lit(W - 1))).alias("_ri"),
-        )
-        .groupBy("_id")
-        .agg(F.collect_set("_ri").alias("_removed"))
-    )
-    # reconstruction: `_wtk` is materialized as a COLUMN so the lambdas
-    # below reference an attribute — referencing the regexp_extract_all
-    # expression inside them would re-extract the whole text once per
-    # token position (see bind_once; measured minutes → seconds on
-    # 600-token docs)
-    wtoks = F.regexp_extract_all(F.col(text_col), F.lit(r"\s*\S+"), F.lit(0))
-    out = df.join(removed, df[id_col] == removed["_id"], "left").withColumn(
-        "_wtk", wtoks
-    )
-    wt = F.col("_wtk")
-    keep_idx = F.filter(
-        F.sequence(F.lit(1), F.greatest(F.size(wt), F.lit(1))),
-        lambda i: (i <= F.size(wt))
-        & (
-            F.col("_removed").isNull()
-            | ~F.array_contains("_removed", (i - 1).cast("int"))
-        ),
-    )
-    body_chars = F.aggregate(wt, F.lit(0), lambda a, x: a + F.length(x))
-    tail = F.col(text_col).substr(
-        body_chars + 1, F.greatest(F.length(text_col) - body_chars, F.lit(0))
-    )
-    return out.select(
-        *[df[c] for c in df.columns],
-        F.concat(
-            F.concat_ws("", F.transform(keep_idx, lambda i: F.element_at(wt, i))),
-            tail,
-        ).alias("clean_text"),
-        F.coalesce(F.size("_removed"), F.lit(0)).alias("n_removed_tokens"),
+    return _window_dedup(
+        df, text_col, id_col, window_tokens,
+        r"\S+", " ", r"\s*\S+", r"^", "n_removed_tokens", caches,
     )
 
 

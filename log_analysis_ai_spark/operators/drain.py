@@ -23,11 +23,10 @@ the sharded miner gives every distinct masked prefix its own shard instead
 parallelism-invariant mining). Documented + property-pinned in
 drain_core.py / test_max_children_overflow_divergence.
 
-Scale note (100 TB): the broadcast catalog is the only driver-side state.
+Scale note: the broadcast catalog is the only driver-side state.
 Template catalogs for machine-generated logs grow with template cardinality,
-not data volume (typically 10^3–10^5 entries). If a workload ever produces a
-catalog too large to broadcast, swap `assign` for a shard-key equi-join (the
-shard-key column already exists) — semantics unchanged.
+not data volume (typically 10^3–10^5 entries), so pass 2 has one path, the
+broadcast.
 """
 
 from __future__ import annotations
@@ -220,8 +219,8 @@ _EMPTY_ID = template_id(dc.EMPTY_TEMPLATE)
 
 def _assign_pdf(pdf: pd.DataFrame, cand_for, sim: float, pats: tuple) -> pd.DataFrame:
     """Match one pandas batch against its shards' candidates (cand_for:
-    shard_key -> expanded candidate list). Shared by the broadcast and
-    cogrouped pass-2 paths — emits template_id / template_str / _pvals."""
+    shard_key -> expanded candidate list) — emits template_id /
+    template_str / _pvals."""
     pdf = pdf.reset_index(drop=True)
     texts = pdf["text"].astype(str)
     pre_np = preprocess_series(texts, pats).to_numpy()
@@ -300,9 +299,7 @@ def assign_templates(
     df_with_keys: DataFrame, catalogs: dict[str, list[list[str]]], cfg: PipelineConfig
 ) -> DataFrame:
     """Pass 2: broadcast the final catalog; match every row; emit
-    template_id / template_str / params columns. For catalogs too large to
-    broadcast, use assign_templates_cogrouped instead (same output,
-    catalog never passes through the driver)."""
+    template_id / template_str / params columns."""
     spark = df_with_keys.sparkSession
     # broadcast SLIM: template strings only — ids, token lists, wildcard
     # positions and param names are derivable, so each worker rebuilds them
@@ -329,95 +326,6 @@ def assign_templates(
 
     mapped = df_with_keys.mapInPandas(assign_fn, schema=_assign_out_schema(df_with_keys))
     return _attach_params(mapped)
-
-
-def assign_templates_cogrouped(
-    df_with_keys: DataFrame, mined_tdf: DataFrame, cfg: PipelineConfig
-) -> DataFrame:
-    """Pass 2 WITHOUT a driver broadcast — the module docstring's "catalog
-    too large to broadcast" swap, implemented.
-
-    Cogroups each (shard_key, salt) slice of the fact table with its
-    shard's catalog rows (from `mined_templates_df`, which never leaves
-    the cluster): the catalog side is replicated across the salt dimension
-    — catalog rows ≪ fact rows, so salt_buckets× replication is noise —
-    and each group matches with exactly the same vectorized core as the
-    broadcast path (bit-equality is tested). Creation order (the tie-break
-    contract) is restored per group by sorting catalog rows on their
-    (salt, pos) first-appearance struct.
-
-    Cost vs broadcast: one grouped-map Arrow exchange per (shard, salt)
-    group plus the fact shuffle on the group key — the price of never
-    materializing the catalog on one machine. Use when template
-    cardinality outgrows broadcast capacity (e.g. 10^7+ distinct masked
-    prefixes at 10^12 rows); `mine_and_assign` stays on the broadcast
-    path for the common catalog-is-tiny regime."""
-    sim = cfg.sim_threshold
-    pats = tuple(cfg.preprocess_patterns)
-    cat = mined_tdf.select(
-        "shard_key",
-        F.col("first.salt").alias("_csalt"),
-        F.col("first.pos").alias("_cpos"),
-        "template",
-    ).withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(cfg.salt_buckets - 1))))
-
-    def fn(key, fact_pdf: pd.DataFrame, cat_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(fact_pdf) == 0:
-            return fact_pdf.assign(template_id=pd.Series(dtype="int64"),
-                                   template_str=pd.Series(dtype="object"),
-                                   _pvals=pd.Series(dtype="object"))
-        cat_sorted = cat_pdf.sort_values(["_csalt", "_cpos"], kind="mergesort")
-        cand = [_cand_entry(s) for s in cat_sorted["template"]]
-        return _assign_pdf(fact_pdf, lambda _skey: cand, sim, pats)
-
-    mapped = (
-        df_with_keys.groupBy("shard_key", "salt")
-        .cogroup(cat.groupBy("shard_key", "salt"))
-        .applyInPandas(fn, schema=_assign_out_schema(df_with_keys))
-    )
-    return _attach_params(mapped)
-
-
-def templates_table_distributed(spark: SparkSession, mined_tdf: DataFrame) -> DataFrame:
-    """The templates catalog table derived WITHOUT a driver collect —
-    companion to assign_templates_cogrouped for the huge-catalog regime.
-    template ids are xxhash64(template) (hashing.template_id == Spark's
-    xxhash64 at seed 42, parity-tested), duplicates across shards keep the
-    lexicographically smallest shard_key (same rule as templates_table's
-    sorted-first-appearance); the reserved <EMPTY> row is unioned in."""
-    tbl = (
-        mined_tdf.groupBy("template")
-        .agg(F.min("shard_key").alias("_skey"))
-        .select(
-            F.xxhash64("template").alias("template_id"),
-            F.col("template").alias("template_str"),
-            F.size(F.split("template", " ")).cast("int").alias("token_count"),
-            F.xxhash64("_skey").alias("shard_key"),
-        )
-    )
-    empty = spark.createDataFrame(
-        [(template_id(dc.EMPTY_TEMPLATE), dc.EMPTY_TEMPLATE, 0, xxh64("0|"))],
-        "template_id long, template_str string, token_count int, shard_key long",
-    )
-    return tbl.unionByName(empty)
-
-
-def mine_and_assign_distributed(
-    df: DataFrame, cfg: PipelineConfig | None = None, persist: bool = True
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """mine_and_assign for the catalog-too-large-to-broadcast regime: the
-    mined template table feeds assignment and the templates catalog
-    entirely cluster-side — the ONLY driver-side action is triggering the
-    jobs. Output is bit-identical to mine_and_assign (tested); the
-    difference is physical: grouped-map cogroup instead of a broadcast."""
-    cfg = cfg or PipelineConfig()
-    keyed = with_shard_key(df, cfg)
-    if persist:
-        keyed = keyed.persist()
-    mined = mined_templates_df(keyed, cfg).persist()
-    assigned = assign_templates_cogrouped(keyed, mined, cfg).drop("salt", "shard_key")
-    templates = templates_table_distributed(df.sparkSession, mined)
-    return assigned, templates, keyed
 
 
 def templates_table(spark: SparkSession, catalogs: dict[str, list[list[str]]]) -> DataFrame:

@@ -61,16 +61,43 @@ def _bigrams(df: DataFrame, col: str, id_col: str) -> DataFrame:
     )
 
 
+def _train(bg: DataFrame) -> DataFrame:
+    """Model from a bigram stream: (w1, w2, cb, cu)."""
+    cb = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cb"))
+    return cb.join(cb.groupBy("w1").agg(F.sum("cb").alias("cu")), "w1")
+
+
+def _score(df: DataFrame, bg: DataFrame, model: DataFrame, id_col: str, alpha: float) -> DataFrame:
+    """`df` + lm_cross_entropy / lm_perplexity of its bigram stream `bg`
+    under `model` (add-α smoothing, flat backoff for unseen bigrams)."""
+    if alpha <= 0:
+        raise ValueError(f"alpha must be positive, got {alpha}")
+    scored = (
+        bg.join(model, ["w1", "w2"], "left")
+        .crossJoin(F.broadcast(vocab_size(model)))
+        .select(
+            id_col,
+            (
+                -F.log(
+                    (F.coalesce(F.col("cb"), F.lit(0)) + F.lit(alpha))
+                    / (F.coalesce(F.col("cu"), F.lit(0)) + F.lit(alpha) * F.col("V"))
+                )
+            ).alias("_nll"),
+        )
+        .groupBy(id_col)
+        .agg(F.avg("_nll").alias("lm_cross_entropy"))
+        .withColumn("lm_perplexity", F.exp("lm_cross_entropy"))
+    )
+    return df.join(scored, id_col, "left")
+
+
 def train_bigram_lm(df: DataFrame, col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Train the model: one row per distinct corpus bigram with its count
     `cb` and its context's total count `cu`. Two partial aggs + one
     model-sized join (broadcast-able when the vocab is small; never
     corpus-sized). Persist the result as parquet to score future batches
     against a frozen model."""
-    bg = _bigrams(df, col, id_col)
-    cb = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cb"))
-    cu = cb.groupBy("w1").agg(F.sum("cb").alias("cu"))
-    return cb.join(cu, "w1")
+    return _train(_bigrams(df, col, id_col))
 
 
 def vocab_size(model: DataFrame) -> DataFrame:
@@ -94,26 +121,7 @@ def bigram_lm_score(
     backoff would need a second join on w1 alone); self-trained scoring
     (`lm_perplexity`) never hits the backoff path, so its scores are the
     exact Lidstone estimates."""
-    if alpha <= 0:
-        raise ValueError(f"alpha must be positive, got {alpha}")
-    bg = _bigrams(df, col, id_col)
-    scored = (
-        bg.join(model, ["w1", "w2"], "left")
-        .crossJoin(F.broadcast(vocab_size(model)))
-        .select(
-            id_col,
-            (
-                -F.log(
-                    (F.coalesce(F.col("cb"), F.lit(0)) + F.lit(alpha))
-                    / (F.coalesce(F.col("cu"), F.lit(0)) + F.lit(alpha) * F.col("V"))
-                )
-            ).alias("_nll"),
-        )
-        .groupBy(id_col)
-        .agg(F.avg("_nll").alias("lm_cross_entropy"))
-        .withColumn("lm_perplexity", F.exp("lm_cross_entropy"))
-    )
-    return df.join(scored, id_col, "left")
+    return _score(df, _bigrams(df, col, id_col), model, id_col, alpha)
 
 
 def lm_perplexity(
@@ -132,27 +140,7 @@ def lm_perplexity(
     immediately shuffled by the aggregations, so pre-widening a narrow
     scan only adds a repartition — measured slower at sandbox scale and
     a no-op decision at cluster scale where scans arrive wide.)"""
-    if alpha <= 0:
-        raise ValueError(f"alpha must be positive, got {alpha}")
     from .dedup import compute_once
 
     bg = compute_once(_bigrams(df, col, id_col))
-    cb = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cb"))
-    model = cb.join(cb.groupBy("w1").agg(F.sum("cb").alias("cu")), "w1")
-    scored = (
-        bg.join(model, ["w1", "w2"], "left")
-        .crossJoin(F.broadcast(vocab_size(model)))
-        .select(
-            id_col,
-            (
-                -F.log(
-                    (F.coalesce(F.col("cb"), F.lit(0)) + F.lit(alpha))
-                    / (F.coalesce(F.col("cu"), F.lit(0)) + F.lit(alpha) * F.col("V"))
-                )
-            ).alias("_nll"),
-        )
-        .groupBy(id_col)
-        .agg(F.avg("_nll").alias("lm_cross_entropy"))
-        .withColumn("lm_perplexity", F.exp("lm_cross_entropy"))
-    )
-    return df.join(scored, id_col, "left")
+    return _score(df, bg, _train(bg), id_col, alpha)

@@ -514,9 +514,13 @@ def near_dup_embeddings(
 
 
 def ivf_assign_udf(centroids: np.ndarray):
-    """Nearest-centroid id AND cosine-to-that-centroid per vector, in ONE
-    Arrow-batched matmul (the x·c products serve both the argmin and the
-    cosine numerator)."""
+    """Nearest-centroid id AND cosine-to-that-centroid per vector, per
+    Arrow batch: one matmul for the argmin, then a row-wise dot for the
+    cosine numerator. The matmul's value for a row can differ in the last
+    ulp with the batch's shape (BLAS kernels split rows differently), so
+    two identical vectors in different batches would get different
+    `csim`, and semantic_dedup's keep order (csim, then id) would not be a
+    function of the data; the row-wise dot depends on the row alone."""
     cent = centroids.astype("float64")
     cnorm = np.linalg.norm(cent, axis=1)
     cnorm[cnorm == 0.0] = 1.0
@@ -529,7 +533,7 @@ def ivf_assign_udf(centroids: np.ndarray):
         lists = d.argmin(1)
         xnorm = np.linalg.norm(m, axis=1)
         xnorm[xnorm == 0.0] = 1.0
-        csim = prod[np.arange(len(m)), lists] / (xnorm * cnorm[lists])
+        csim = np.einsum("ij,ij->i", m, cent[lists]) / (xnorm * cnorm[lists])
         return pd.DataFrame({"list": lists.astype("int32"), "csim": csim})
 
     return assign

@@ -281,7 +281,7 @@ def parse_logfmt(df: DataFrame, col: str = "value") -> DataFrame:
         ),
     )
     out = (
-        df.withColumn("fields", F.map_from_arrays(F.transform(kv, lambda s: s.k), F.transform(kv, lambda s: s.v)))
+        df.withColumn("fields", F.map_from_entries(kv))
         .withColumn("_valid", F.size(pairs) > 0)
         .withColumn("message", F.element_at(F.col("fields"), "msg"))
         .withColumn("level", F.element_at(F.col("fields"), "level"))
@@ -331,7 +331,7 @@ def parse_cef(df: DataFrame, col: str = "value") -> DataFrame:
         .withColumn("signature_id", F.element_at(parts, 5))
         .withColumn("name", F.element_at(parts, 6))
         .withColumn("severity", F.element_at(parts, 7))
-        .withColumn("extension", F.map_from_arrays(F.transform(kv, lambda s: s.k), F.transform(kv, lambda s: s.v)))
+        .withColumn("extension", F.map_from_entries(kv))
         .withColumn("_valid", c.startswith("CEF:") & (F.size(parts) >= 7))
     )
 

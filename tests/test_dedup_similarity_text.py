@@ -803,49 +803,75 @@ def test_c4_span_dedup_matches_bruteforce(spark):
     assert got[81][1] == 3 and shared not in got[81][0]
 
 
-def test_c4_span_dedup_plan_shape(spark):
-    """Scale pin (r8 hot-key defusal + r9 hash-only exchanges): the kept
-    occurrence per span is found by a PARTIAL-aggregating groupBy over
-    xxhash64(span) — the plan must carry a partial_min upstream of its
-    exchange (map-side combine is what absorbs a million-occurrence
-    boilerplate span) and NO WindowExec keyed on the span hash (the r7
-    shape, which serialized the hottest span into one task). r9 (VERDICT
-    r8 'what's wrong' #1, the substring_dedup shape): the span-text column
-    `_sp` is GONE from the plan entirely — the explode projects only
-    (id, si, xxhash64(span)), so every span-hash exchange ships 24-byte
-    rows, and span text is re-derived for CANDIDATES only via id-keyed
-    joins back to the materialized sentence table (`_st`/`_kt` transient
-    confirm columns live only in the CANDIDATE-sized confirm subplan;
-    those and the `_sents` arrays never appear in a hashpartitioning
-    KEY). At most five hash exchanges: keeper agg,
-    occurrence-marking probe, the two candidate-sized confirm joins, and
-    the duplicate-sized groupBy(id) — all hash/id-keyed, all skew-safe
-    (combine-absorbed or AQE-splittable). Never a cartesian product.
-    (min(struct) plans as SortAggregate — struct buffers aren't
-    hash-aggregable — but PARTIAL mode, the property that absorbs the hot
-    key, is what's pinned.)"""
+def _hof_calls(plan: str) -> list[str]:
+    """Every filter(...)/transform(...)/aggregate(...) call in a plan
+    string, with its balanced argument text."""
     import re
 
-    from log_analysis_ai_spark.operators.dedup import c4_span_dedup
+    calls = []
+    for m in re.finditer(r"\b(?:filter|transform|aggregate)\(", plan):
+        depth, i = 1, m.end()
+        while depth and i < len(plan):
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        calls.append(plan[m.start():i])
+    return calls
+
+
+@pytest.mark.parametrize(
+    "op, prefix, kw",
+    [
+        ("c4_span_dedup", "One sentence. Two here. Three now. Tail ", {}),
+        ("substring_dedup", "shared boiler tokens one two three four five six ",
+         {"window_tokens": 5}),
+    ],
+    ids=["c4", "substring"],
+)
+def test_window_dedup_plan_shape(spark, op, prefix, kw):
+    """Scale pins for both callers of the window-dedup core
+    (`_window_dedup`). (a) Keep-first is a PARTIAL-aggregating groupBy over
+    the window hash: partial_min upstream of the exchange absorbs a
+    boilerplate window occurring millions of times, and there is NO
+    WindowExec (the r7 shape, which serialized the hottest window into one
+    task). (b) Window TEXT never reaches an exchange key: the Arrow stream
+    ships (_id, _ti, _h) rows, and the transient confirm columns
+    `_wt`/`_kwt`, the unit arrays `_toks` and the reconstruction pieces
+    `_pcs` are never part of a hashpartitioning key, nor of the
+    min(struct) buffer. (c) At most five hash exchanges: keeper agg,
+    occurrence-marking probe, the two candidate-sized confirm joins and
+    the duplicate-sized groupBy(id), all hash/id-keyed and skew-safe;
+    never a cartesian product. (d) bind_once's shape: the reconstruction's
+    filter/transform/aggregate lambdas read the materialized `_pcs`
+    column and never contain a regexp_extract_all, which would
+    re-extract the whole text once per piece position. (min(struct)
+    plans as SortAggregate, since struct buffers aren't hash-aggregable;
+    PARTIAL mode, the property that absorbs the hot key, is what's
+    pinned.)"""
+    import re
+
+    from log_analysis_ai_spark.operators import dedup
 
     df = spark.range(200).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("One sentence. Two here. Three now. Tail "), F.col("id")).alias("text"),
+        F.col("id").alias("doc_id"), F.concat(F.lit(prefix), F.col("id")).alias("text")
     )
-    plan = c4_span_dedup(df)._jdf.queryExecution().executedPlan().toString()
+    plan = getattr(dedup, op)(df, **kw)._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan  # no WindowExec anywhere in this operator
     assert "partial_min" in plan  # map-side combine BEFORE the keeper shuffle
-    assert "_sp#" not in plan  # span text column no longer exists at all
+    assert "MapInPandas" in plan and "xxhash64" in plan  # the rolling-hash stream
     assert len(re.findall(r"Exchange hashpartitioning", plan)) <= 5
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
-    assert "xxhash64" in plan
-    # no text/sentence column is ever a shuffle KEY
+    text_cols = ("_wt#", "_kwt#", "_toks#", "_pcs#")
+    assert "_wt#" in plan and "_kwt#" in plan  # the names pinned here exist
     for key in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan):
-        assert "_st#" not in key and "_kt#" not in key and "_sents#" not in key, key
-    # the keeper aggregation folds only (id, position) — span text is not
-    # part of the min(struct) buffer (the r8 shape carried _sp there)
-    for agg in re.findall(r"partial_min\(([^)]*)\)", plan):
-        assert "_sp" not in agg and "_st" not in agg and "_sents" not in agg, agg
+        assert not any(c in key for c in text_cols), key
+    aggs = re.findall(r"partial_min\(([^)]*)\)", plan)
+    assert aggs
+    for agg in aggs:
+        assert "_ti#" in agg and not any(c in agg for c in text_cols), agg
+    hofs = _hof_calls(plan)
+    for call in hofs:
+        assert "regexp_extract_all" not in call, call
+    assert any("_pcs#" in c for c in hofs)  # the lambdas read the pieces column
 
 
 def test_c4_span_dedup_invariant_to_parallelism(spark):
@@ -1112,34 +1138,6 @@ def test_substring_dedup_matches_bruteforce(spark):
     assert got[40] == ("short doc only", 0) and got[50] == ("", 0)
     assert got[60] == ("   \t ", 0)             # all-whitespace round-trips
     assert got[70][0].startswith("  leading") and got[70][0].endswith("   ")
-
-
-def test_substring_dedup_plan_shape(spark):
-    """Scale pins: (a) keep-first is a PARTIAL-aggregating groupBy over the
-    window hash (partial_min upstream of the exchange absorbs a
-    boilerplate window occurring millions of times) — never a window
-    function; (b) the window TEXT is never a shuffle key — every
-    hashpartitioning key set is hash/id-typed (the explode projects only
-    (id, pos, xxhash64(window)), so the exchange carries 24-byte rows, not
-    ~W-token strings); (c) no cartesian product anywhere — candidate
-    verification is equi-join only."""
-    import re
-
-    from log_analysis_ai_spark.operators.dedup import substring_dedup
-
-    df = spark.range(200).select(
-        F.col("id").alias("doc_id"),
-        F.concat(
-            F.lit("shared boiler tokens one two three four five six "), F.col("id")
-        ).alias("text"),
-    )
-    plan = substring_dedup(df, window_tokens=5)._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-    assert "partial_min" in plan
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
-    assert "xxhash64" in plan
-    for key in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan):
-        assert "_wt#" not in key and "_kwt#" not in key and "_toks#" not in key, key
 
 
 def test_substring_dedup_invariant_to_parallelism(spark):
@@ -1431,6 +1429,48 @@ def test_semantic_dedup_invariance_and_validation(spark):
         assert min(v for v, _ in members) == gid
     with _pytest.raises(ValueError, match="eps"):
         semantic_dedup(d, eps=1.0)
+
+
+def test_semantic_dedup_csim_independent_of_batch_shape(spark):
+    """A vector and its clone must get the SAME centroid cosine wherever
+    the Arrow batching puts them, or the (csim, id) keep order stops being
+    a function of the data and the clone can win. Each 3-row batch here
+    holds an original at row 0 and its clone at row 2; a BLAS matmul
+    computes those two rows with different kernels, which differ in the
+    last ulp for most vectors."""
+    from log_analysis_ai_spark.operators.similarity import (
+        ivf_assign_udf,
+        ivf_centroids,
+        semantic_dedup,
+    )
+
+    rng = np.random.default_rng(11)
+    n = 24
+    orig, filler = rng.standard_normal((2, n, 64))
+    rows = []
+    for k in range(n):
+        rows += [(k, orig[k].tolist()), (1000 + k, filler[k].tolist()),
+                 (2000 + k, orig[k].tolist())]
+    d = spark.createDataFrame(rows, "vec_id long, embedding array<double>").coalesce(1)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        cent = ivf_centroids(d, n_lists=4)
+        got = {
+            r.vec_id: r.csim
+            for r in d.select(
+                "vec_id", ivf_assign_udf(cent)(F.col("embedding")).csim.alias("csim")
+            ).collect()
+        }
+        out = {r.vec_id: r for r in semantic_dedup(d, eps=1e-6, n_lists=4).collect()}
+    finally:
+        spark.conf.set(key, old)
+    for k in range(n):
+        assert got[k] == got[2000 + k], k
+        assert out[k].keep and not out[2000 + k].keep, k
+        assert out[k].group_id == out[2000 + k].group_id
+    assert set(out) == set(range(n)) | {2000 + k for k in range(n)}
 
 
 def test_strip_html_rules_and_duckdb_parity(spark):

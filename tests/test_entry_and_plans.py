@@ -203,43 +203,6 @@ def test_pivot_kinds_cover_fixture(spark):
     assert distinct <= set(entry.EVENT_KINDS)
 
 
-def test_cogrouped_assign_equals_broadcast_assign(spark):
-    """The no-broadcast pass 2 (assign_templates_cogrouped — the
-    catalog-too-large-to-broadcast swap the drain module docstring
-    promises) must be bit-identical to the broadcast path, its plan must
-    contain no broadcast of the catalog, and the distributed templates
-    table must equal the collected one."""
-    from pyspark.sql import functions as F
-
-    from log_analysis_ai_spark.config import PipelineConfig
-    from log_analysis_ai_spark.fixtures import materialize_transcripts
-    from log_analysis_ai_spark.operators.drain import (
-        mine_and_assign,
-        mine_and_assign_distributed,
-        templates_table,
-        mine_catalog,
-        with_shard_key,
-    )
-
-    cfg = PipelineConfig(salt_buckets=3)
-    t = spark.read.parquet(materialize_transcripts(80))
-    a_bc, tpl_bc, keyed_bc = mine_and_assign(t, cfg, persist=False)
-    a_cg, tpl_cg, keyed_cg = mine_and_assign_distributed(t, cfg, persist=False)
-    cols = ["conv_id", "turn_idx", "template_id", "template_str", "params"]
-    rows_bc = sorted(
-        (r.conv_id, r.turn_idx, r.template_id, r.template_str, tuple(sorted(r.params.items())))
-        for r in a_bc.select(cols).collect()
-    )
-    rows_cg = sorted(
-        (r.conv_id, r.turn_idx, r.template_id, r.template_str, tuple(sorted(r.params.items())))
-        for r in a_cg.select(cols).collect()
-    )
-    assert rows_bc == rows_cg
-    assert "Broadcast" not in _plan(a_cg.select("template_id"))
-    assert "FlatMapCoGroupsInPandas" in _plan(a_cg.select("template_id"))
-    assert sorted(map(tuple, tpl_bc.collect())) == sorted(map(tuple, tpl_cg.collect()))
-
-
 def test_lsh_signature_computed_once(spark):
     """minhash/simhash/embedding near-dup plans must read the signature
     stage from ONE materialization (compute_once): both self-join sides
