@@ -2063,6 +2063,22 @@ def _events_scrub_pii(spark, sf_dir):
     return lines.select("event_id", scrub_pii("raw").alias("clean")).orderBy("event_id")
 
 
+def _pipeline_checkpointed(spark, sf_dir, tag: str, transcripts) -> dict:
+    """run_checkpointed into a per-process scratch store; the returned
+    tables read its committed snapshots."""
+    from log_analysis_ai_spark.config import PipelineConfig
+    from log_analysis_ai_spark.fixtures import gen_role_lookup, gen_tool_lookup
+    from log_analysis_ai_spark.job import run_checkpointed
+    from log_analysis_ai_spark.lineage import SinkStore
+
+    return run_checkpointed(
+        spark, transcripts,
+        spark.createDataFrame(gen_tool_lookup()), spark.createDataFrame(gen_role_lookup()),
+        SinkStore(_scratch(f"{tag}_wh", sf_dir)), PipelineConfig(),
+        input_desc=f"{tag}_oracle",
+    )
+
+
 def _pipeline_dead_letter(spark, sf_dir):
     """Dead-letter routing through the CHECKPOINTED job (VERDICT r4
     next-round #4): events rendered as transcripts with planted malformed
@@ -2071,11 +2087,6 @@ def _pipeline_dead_letter(spark, sf_dir):
     dead_letter table with first-match reasons while every valid row still
     reaches the miner. Oracled: the reject partition is a pure function of
     event_id."""
-    from log_analysis_ai_spark.config import PipelineConfig
-    from log_analysis_ai_spark.fixtures import gen_role_lookup, gen_tool_lookup
-    from log_analysis_ai_spark.job import run_checkpointed
-    from log_analysis_ai_spark.lineage import SinkStore
-
     ev = _t(spark, sf_dir, "events")
     base = _pipeline_oracle_transcripts(spark, sf_dir).join(
         ev.select(F.col("event_id").cast("string").alias("conv_id"), "event_id"), "conv_id"
@@ -2088,10 +2099,7 @@ def _pipeline_dead_letter(spark, sf_dir):
         .otherwise(F.col("text")).alias("text"),
         F.when(F.pmod("event_id", F.lit(17)) == 0, F.lit(None)).otherwise(F.col("ts")).alias("ts"),
     )
-    store = SinkStore(_scratch("deadletter_wh", sf_dir))
-    out = run_checkpointed(spark, t, spark.createDataFrame(gen_tool_lookup()),
-                           spark.createDataFrame(gen_role_lookup()), store,
-                           PipelineConfig(), input_desc="deadletter_oracle")
+    out = _pipeline_checkpointed(spark, sf_dir, "deadletter", t)
     return (
         out["dead_letter"].groupBy("reject_reason").agg(F.count(F.lit(1)).alias("n"))
         .orderBy("reject_reason")
@@ -2099,36 +2107,14 @@ def _pipeline_dead_letter(spark, sf_dir):
 
 
 def _pipeline_sink_counts(spark, sf_dir):
-    from log_analysis_ai_spark.config import PipelineConfig
-    from log_analysis_ai_spark.fixtures import gen_role_lookup, gen_tool_lookup
-    from log_analysis_ai_spark.pipeline import run_pipeline
-
-    out = run_pipeline(
-        _pipeline_oracle_transcripts(spark, sf_dir),
-        spark.createDataFrame(gen_tool_lookup()),
-        spark.createDataFrame(gen_role_lookup()),
-        PipelineConfig(),
-        persist_keyed=False,  # one-shot query in a long-lived session: no cache leak
-    )
-    for c in out["_route_caches"]:  # same no-leak contract for route()'s count cache
-        c.unpersist()
+    t = _pipeline_oracle_transcripts(spark, sf_dir)
+    out = _pipeline_checkpointed(spark, sf_dir, "sinkcounts", t)
     return out["sink_counts"].orderBy("template_class", "anomaly_flag")
 
 
 def _pipeline_agg_template_tool(spark, sf_dir):
-    from log_analysis_ai_spark.config import PipelineConfig
-    from log_analysis_ai_spark.fixtures import gen_role_lookup, gen_tool_lookup
-    from log_analysis_ai_spark.pipeline import run_pipeline
-
-    out = run_pipeline(
-        _pipeline_oracle_transcripts(spark, sf_dir),
-        spark.createDataFrame(gen_tool_lookup()),
-        spark.createDataFrame(gen_role_lookup()),
-        PipelineConfig(),
-        persist_keyed=False,  # one-shot query in a long-lived session: no cache leak
-    )
-    for c in out["_route_caches"]:  # same no-leak contract for route()'s count cache
-        c.unpersist()
+    t = _pipeline_oracle_transcripts(spark, sf_dir)
+    out = _pipeline_checkpointed(spark, sf_dir, "aggtool", t)
     return (
         out["agg_template_tool"]
         .join(F.broadcast(out["templates"].select("template_id", "template_str")), "template_id")

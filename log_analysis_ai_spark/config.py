@@ -1,9 +1,10 @@
 """Pipeline configuration shared by the Spark engine and the pandas oracle.
 
-Drain defaults mirror the reference (depth=4, similarity=0.5,
-max_children=100 — reference: src/data_loader_config.h:32-34). Everything
-else is this engine's spec; the oracle consumes the SAME instance, so the
-golden outputs always agree on thresholds.
+Drain defaults mirror the reference (depth=4, similarity=0.5 — reference:
+src/data_loader_config.h:32-34); its max_children has no field, because the
+sharded miner never overflows (deviation note in operators/drain.py).
+Everything else is this engine's spec; the oracle consumes the SAME
+instance, so the golden outputs always agree on thresholds.
 """
 
 from __future__ import annotations
@@ -24,7 +25,6 @@ class PipelineConfig:
     # Drain (reference defaults, src/data_loader_config.h:32-34)
     depth: int = 4
     sim_threshold: float = 0.5
-    max_children: int = 100
     # first-match-wins leading-noise strip patterns; user-supplied sets
     # REPLACE the defaults (reference: src/drain_parser.cpp:256-267).
     # Strings, not compiled — they ship to Spark workers and into the run
@@ -40,8 +40,7 @@ class PipelineConfig:
     # collect size independent of this knob.
     salt_buckets: int = 16
     # routing / rarity (frequency-based rarity scoring per template over
-    # event-time windows — BASELINE.json north_star)
-    window: str = "1 hour"
+    # hourly event-time windows — BASELINE.json north_star)
     anomaly_min_count: int = 5   # window count below this => anomaly_flag
     rare_min_count: int = 10     # global template count below this => class 'rare'
     # Pass-1 duplicate collapse: groupBy the line itself so the mine shuffle
@@ -53,22 +52,3 @@ class PipelineConfig:
     # it's off by default for mostly-unique corpora like parameterized
     # transcripts.
     collapse_duplicate_lines: bool = False
-    # Columns dropped from the routed fanout (and its aggregates) before the
-    # route joins and the partitioned write. Both defaults are recomputable
-    # per row from (text, template_str): params via wildcard-position
-    # extraction, detected_ts via the parse regex. At 10^12 turns the params
-    # map alone is the widest column in the routed shuffle/write; dropping
-    # it cuts bytes/turn without losing information (turns_parsed keeps the
-    # full schema).
-    routed_drop_cols: tuple[str, ...] = ("params", "detected_ts")
-    # Mine-stage shuffle width. None → 4 × spark.sql.shuffle.partitions,
-    # sized for this sandbox's 8-32 cores (balls-in-bins: wider bins keep at
-    # most one hot salted sub-shard per task). On a large cluster set this
-    # explicitly to ≳ salt_buckets × (expected # of hot shards) — at 1000
-    # executors the 4× default can leave hot sub-shards sharing tasks.
-    mine_partitions: int | None = None
-    # routing joins the count tables back by broadcast while they stay under
-    # this many rows; above it (#windows × #templates over a very long time
-    # range) route() falls back to a co-partitioned shuffle join instead of
-    # shipping an oversized broadcast to every executor.
-    broadcast_count_limit: int = 2_000_000

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from .config import PipelineConfig
 from .hashing import xxh64
 from .lineage import SinkStore
-from .pipeline import aggregate, enrich, mine, parse, route, sink_counts
+from .pipeline import ROUTED_DROP_COLS, aggregate, enrich, mine, parse, route, sink_counts
 
 
 def _fingerprint(cfg: PipelineConfig, inputs: dict[str, str]) -> str:
@@ -57,6 +57,19 @@ def reject_reason(df: DataFrame):
     return reason
 
 
+def split_rejects(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(dead, valid): rows with a reject_reason, carrying it as a column,
+    and the rest. Both drop the parser's `_valid` flag. Lazy: one narrow
+    codegen filter per side, no extra shuffle."""
+    flagged = df.withColumn("_reject", reject_reason(df))
+    valid_col = ["_valid"] if "_valid" in df.columns else []
+    dead = flagged.filter(F.col("_reject").isNotNull()).withColumnRenamed(
+        "_reject", "reject_reason"
+    ).drop(*valid_col)
+    valid = flagged.filter(F.col("_reject").isNull()).drop("_reject", *valid_col)
+    return dead, valid
+
+
 def run_checkpointed(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -73,18 +86,10 @@ def run_checkpointed(
 
     # stage 0: validate -> dead_letter (committed even when empty, so a
     # clean run is distinguishable from a run that never validated); valid
-    # rows flow on. One narrow codegen filter per side — no extra shuffle.
-    flagged = transcripts.withColumn("_reject", reject_reason(transcripts))
+    # rows flow on.
+    dead, transcripts = split_rejects(transcripts)
     if not (resume and store.committed("dead_letter", fp)):
-        dead = flagged.filter(F.col("_reject").isNotNull()).withColumnRenamed(
-            "_reject", "reject_reason"
-        )
-        if "_valid" in dead.columns:
-            dead = dead.drop("_valid")
         store.write_table(dead, "dead_letter", fp)
-    transcripts = flagged.filter(F.col("_reject").isNull()).drop(
-        "_reject", *(["_valid"] if "_valid" in flagged.columns else [])
-    )
 
     # stage 1: parse + mine -> turns_parsed, templates
     if not (resume and store.committed("turns_parsed", fp) and store.committed("templates", fp)):
@@ -112,12 +117,9 @@ def run_checkpointed(
     # directory values always read back as strings, so partitioning on the
     # boolean column directly would silently retype it on read.
     if not (resume and store.committed("routed", fp)):
-        # slim the fanout: cfg.routed_drop_cols (params map, detected_ts) are
-        # recomputable from (text, template_str) — dropping them here column-
-        # prunes the turns_parsed scan AND shrinks the routed write
         route_caches: list = []
         routed = route(
-            enrich(turns_parsed.drop(*cfg.routed_drop_cols), tool_lookup, role_lookup),
+            enrich(turns_parsed.drop(*ROUTED_DROP_COLS), tool_lookup, role_lookup),
             cfg,
             caches=route_caches,
         )

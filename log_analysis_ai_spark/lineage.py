@@ -39,8 +39,9 @@ runtime-jar `writeTo()` path is mechanical — no jar ships in this sandbox):
   metadata-only min/max pruning; Spark's parquet footer pruning still
   applies at scan time).
 - no schema-evolution or partition-spec metadata: schema lives in the
-  parquet files alone; a column rename is a rewrite here, a metadata edit
-  in Iceberg.
+  parquet files (a manifest records it only for a snapshot with no data
+  file, which a partitioned write of zero rows leaves); a column rename is
+  a rewrite here, a metadata edit in Iceberg.
 - no row-level deletes (Iceberg v2 position/equality delete files):
   deletes are copy-on-write snapshot rewrites.
 - retention: last two snapshots, hardcoded, vs Iceberg's configurable
@@ -61,6 +62,7 @@ import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _scan_snapshot(snap_dir: str) -> tuple[list[dict], int, dict[str, int]]:
@@ -207,6 +209,11 @@ class SinkStore:
             "files": files,
             "created_ts": time.time(),
         }
+        if not files:  # zero rows, partitioned: no file carries the schema
+            parts = partition_by or []
+            manifest["schema"] = StructType(
+                [f for f in df.schema.fields if f.name not in parts] + [df.schema[p] for p in parts]
+            ).jsonValue()
         manifest_name = f"manifest-{seq:06d}-{uid}.json"
         with open(os.path.join(mdir, manifest_name), "w") as f:
             json.dump(manifest, f)
@@ -246,8 +253,13 @@ class SinkStore:
     def read_table(self, spark: SparkSession, name: str) -> DataFrame:
         """Resolve via the manifest pointer — never a mutable directory path.
         The resolved snapshot dir is immutable, so the returned DataFrame
-        keeps working even if a newer commit lands mid-read."""
-        snap = self.snapshot_path(name)
-        if snap is None:
+        keeps working even if a newer commit lands mid-read. A snapshot with
+        no data file (a partitioned write of zero rows) reads back as an
+        empty DataFrame of the schema its manifest recorded."""
+        m = self.current_manifest(name)
+        snap = None if m is None else os.path.join(self.table_path(name), m["snapshot"])
+        if snap is None or not os.path.isdir(snap):
             raise FileNotFoundError(f"table {name!r} has no committed snapshot in {self.root}")
+        if not m["files"]:
+            return spark.createDataFrame([], StructType.fromJson(m["schema"]))
         return spark.read.parquet(snap)

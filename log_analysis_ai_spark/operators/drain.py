@@ -142,18 +142,14 @@ def mined_templates_df(df_with_keys: DataFrame, cfg: PipelineConfig) -> DataFram
         )
 
     spark = df_with_keys.sparkSession
-    # mine-shuffle width (cfg.mine_partitions overrides): default 4× the
-    # configured shuffle width — a dominant template's sub-shards are the
-    # heavy keys, and hashing `salt_buckets` heavy keys into exactly #cores
-    # partitions leaves some tasks with 2-3 of them (balls-in-bins) while
-    # others idle; wider bins keep at most one heavy key per task and the
-    # extra small tasks just queue (mine-stage wall is set by its slowest
-    # task, not task count). At 1000 executors 4× the default may
-    # undershoot — size cfg.mine_partitions ≳ salt_buckets × (# hot shards)
-    # there (VERDICT r3 nit; see the config field's docstring).
-    n_parts = cfg.mine_partitions or 4 * int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    # mine-shuffle width: 4× the configured shuffle width — a dominant
+    # template's sub-shards are the heavy keys, and hashing `salt_buckets`
+    # heavy keys into exactly #cores partitions leaves some tasks with 2-3
+    # of them (balls-in-bins) while others idle; wider bins keep at most one
+    # heavy key per task and the extra small tasks just queue (mine-stage
+    # wall is set by its slowest task, not task count). On a large cluster
+    # the width follows spark.sql.shuffle.partitions.
+    n_parts = 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
     lines = df_with_keys.filter(F.col("text") != "").select(
         "conv_id", "turn_idx", "text", "shard_key", "salt"
     )

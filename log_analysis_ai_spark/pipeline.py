@@ -4,7 +4,9 @@ Each stage is a plain function DataFrame→DataFrame (the Spark-native analog
 of the reference's pybind surface `parse_log_file` / `extract_attributes`,
 reference: src/python_bindings.cpp:193-212). All scalar work is native
 `pyspark.sql.functions` (JVM-side, whole-stage codegen); Python appears only
-in the Arrow-vectorized Drain UDFs (operators/drain.py).
+in the Arrow-vectorized Drain UDFs (operators/drain.py). The stages are
+composed in one place, `job.run_checkpointed`, which commits each stage's
+output before the next stage reads it.
 
 Plan-shape invariants (checked via .explain during development):
 - parse/enrich are narrow + one broadcast hash join each — no shuffle.
@@ -22,6 +24,18 @@ from pyspark.sql import functions as F
 
 from .config import DETECTED_TS_RE, LEVEL_RE, PipelineConfig
 from .operators.drain import mine_and_assign
+
+# Dropped from turns_parsed before enrich/route: both are recomputable per
+# row from (text, template_str), and the params map is a turn's widest
+# column, so the turns_parsed scan, the route joins and the routed write
+# all shrink. turns_parsed itself keeps the full schema.
+ROUTED_DROP_COLS = ("params", "detected_ts")
+
+# route() joins the count tables back by broadcast while they stay under
+# this many rows; above it (#windows × #templates over a very long time
+# range) it falls back to a shuffle join instead of shipping an oversized
+# broadcast to every executor.
+BROADCAST_COUNT_LIMIT = 2_000_000
 
 
 def parse(df: DataFrame) -> DataFrame:
@@ -50,7 +64,7 @@ def enrich(df: DataFrame, tool_lookup: DataFrame, role_lookup: DataFrame) -> Dat
     )
 
 
-def route(df: DataFrame, cfg: PipelineConfig, caches: list | None = None) -> DataFrame:
+def route(df: DataFrame, cfg: PipelineConfig, caches: list) -> DataFrame:
     """Frequency-based rarity scoring over event-time windows + sink keys.
 
     Counts are computed as partial-aggregated groupBys and broadcast-joined
@@ -67,9 +81,9 @@ def route(df: DataFrame, cfg: PipelineConfig, caches: list | None = None) -> Dat
     broadcast guard). The cache is persist(MEMORY_AND_DISK), NOT
     localCheckpoint — persisted blocks keep their lineage, so an executor
     loss/decommission mid-job recomputes instead of failing (the property
-    that matters at 1000-executor scale). If `caches` is given, the persisted
-    handle is appended to it for the caller to unpersist after
-    materializing downstream tables (run_pipeline/job.py do)."""
+    that matters at 1000-executor scale). The persisted handle is appended
+    to `caches`; the caller unpersists it once the routed table is
+    committed (job.run_checkpointed does)."""
     df = df.withColumn("window_start", F.date_trunc("hour", F.col("ts")))
     # ONE scan of the fact table builds the window counts; materializing the
     # (windows × templates)-sized result lets both broadcast joins AND the
@@ -80,8 +94,7 @@ def route(df: DataFrame, cfg: PipelineConfig, caches: list | None = None) -> Dat
         .agg(F.count(F.lit(1)).alias("window_count"))
         .persist()
     )
-    if caches is not None:
-        caches.append(window_counts)
+    caches.append(window_counts)
     global_counts = window_counts.groupBy("template_id").agg(
         F.sum("window_count").alias("global_count")
     )
@@ -91,7 +104,7 @@ def route(df: DataFrame, cfg: PipelineConfig, caches: list | None = None) -> Dat
     # so fall back to a shuffle join (this count also materializes the
     # persisted cache). global_counts ≤ window_counts, so one check covers
     # both.
-    small = window_counts.count() <= cfg.broadcast_count_limit
+    small = window_counts.count() <= BROADCAST_COUNT_LIMIT
     wjoin = F.broadcast(window_counts) if small else window_counts
     gjoin = F.broadcast(global_counts) if small else global_counts
     n_params = F.size(F.split(F.col("template_str"), r"<\*>")) - F.lit(1)
@@ -121,51 +134,3 @@ def aggregate(routed: DataFrame) -> DataFrame:
 def sink_counts(routed: DataFrame) -> DataFrame:
     """Per-sink row counts — the correctness gate vs the oracle."""
     return routed.groupBy("template_class", "anomaly_flag").agg(F.count(F.lit(1)).alias("n"))
-
-
-def run_pipeline(
-    transcripts: DataFrame,
-    tool_lookup: DataFrame,
-    role_lookup: DataFrame,
-    cfg: PipelineConfig | None = None,
-    persist_keyed: bool = True,
-) -> dict[str, DataFrame]:
-    """Build the pipeline plan; returns all derived tables.
-
-    Actions at build time: pass-1 mining's catalog collect, plus route()'s
-    count-table materialization (persist + count for the broadcast guard —
-    see route's docstring). Everything else stays lazy.
-
-    `routed` (and its aggregates) drop `cfg.routed_drop_cols` — by default
-    the per-row `params` map and `detected_ts`, both recomputable from
-    (text, template_str) — so the route joins and the routed fanout write
-    ship materially fewer bytes per turn; `turns_parsed` keeps the full
-    schema.
-
-    When `persist_keyed` is True the dict includes `_keyed_cache`: the
-    persisted shard-keyed DataFrame shared by both mining passes. Callers
-    MUST `out["_keyed_cache"].unpersist()` once the derived tables are
-    materialized (job.py's checkpointed path does) — otherwise each call
-    leaks one cached DataFrame in a long-lived session. Pass
-    persist_keyed=False for one-shot small inputs to skip the cache
-    entirely (pass 2 then recomputes shard keys once). The dict always
-    includes `_route_caches`: route()'s persisted count table(s), to
-    unpersist under the same contract (small — (#windows × #templates)
-    rows — so the leak is mild, but still a leak)."""
-    cfg = cfg or PipelineConfig()
-    parsed = parse(transcripts)
-    assigned, templates, keyed = mine_and_assign(parsed, cfg, persist=persist_keyed)
-    enriched = enrich(assigned.drop(*cfg.routed_drop_cols), tool_lookup, role_lookup)
-    route_caches: list = []
-    routed = route(enriched, cfg, caches=route_caches)
-    out = {
-        "turns_parsed": assigned,
-        "templates": templates,
-        "routed": routed,
-        "agg_template_tool": aggregate(routed),
-        "sink_counts": sink_counts(routed),
-        "_route_caches": route_caches,
-    }
-    if persist_keyed:
-        out["_keyed_cache"] = keyed
-    return out

@@ -96,7 +96,7 @@ def stream_pipeline(
     assignment — the streaming mirror of the batch job's stage-0 contract.
     Both writes are idempotent per batch (dynamic overwrite on _batch_id),
     so a retried batch replaces BOTH partitions consistently."""
-    from ..job import reject_reason
+    from ..job import split_rejects
 
     cfg = cfg or PipelineConfig()
 
@@ -104,21 +104,13 @@ def stream_pipeline(
         if batch_df.isEmpty():
             return
         if dead_letter_path is not None:
-            flagged = batch_df.withColumn("_reject", reject_reason(batch_df))
-            dead = flagged.filter(F.col("_reject").isNotNull()).withColumnRenamed(
-                "_reject", "reject_reason"
-            )
-            if "_valid" in dead.columns:
-                dead = dead.drop("_valid")
+            dead, batch_df = split_rejects(batch_df)
             (
                 dead.withColumn("_batch_id", F.lit(batch_id))
                 .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("_batch_id")
                 .parquet(dead_letter_path)
-            )
-            batch_df = flagged.filter(F.col("_reject").isNull()).drop(
-                "_reject", *(["_valid"] if "_valid" in flagged.columns else [])
             )
         keyed = with_shard_key(batch_df, cfg)
         assigned = assign_templates(keyed, catalogs, cfg).drop("salt", "shard_key")

@@ -49,21 +49,37 @@ def test_topk_compiles_to_take_ordered(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_no_row_at_a_time_python_udf_anywhere(spark):
+def _routed(t, caches: list):
+    """route(enrich(mine(parse(t)))) as a lazy plan, slimmed the way
+    run_checkpointed slims it; the persisted handles go to `caches`."""
+    from log_analysis_ai_spark.config import PipelineConfig
+    from log_analysis_ai_spark.fixtures import gen_role_lookup, gen_tool_lookup
+    from log_analysis_ai_spark.pipeline import ROUTED_DROP_COLS, enrich, mine, parse, route
+
+    cfg, lookup = PipelineConfig(), t.sparkSession.createDataFrame
+    assigned, _, keyed = mine(parse(t), cfg)
+    caches.append(keyed)
+    tool_l, role_l = lookup(gen_tool_lookup()), lookup(gen_role_lookup())
+    return route(enrich(assigned.drop(*ROUTED_DROP_COLS), tool_l, role_l), cfg, caches)
+
+
+@pytest.fixture()
+def caches():
+    held: list = []
+    yield held
+    for c in held:
+        c.unpersist()
+
+
+def test_no_row_at_a_time_python_udf_anywhere(spark, caches):
     """BatchEvalPython = per-row Python serde; the engine must only ever use
     Arrow evals (ArrowEvalPython / mapInPandas / FlatMapGroupsInPandas)."""
-    from log_analysis_ai_spark.config import PipelineConfig
-    from log_analysis_ai_spark.fixtures import gen_role_lookup, gen_tool_lookup, gen_transcripts
-    from log_analysis_ai_spark.pipeline import run_pipeline
+    from log_analysis_ai_spark.fixtures import gen_transcripts
+    from log_analysis_ai_spark.pipeline import aggregate
 
-    out = run_pipeline(
-        spark.createDataFrame(gen_transcripts(30)),
-        spark.createDataFrame(gen_tool_lookup()),
-        spark.createDataFrame(gen_role_lookup()),
-        PipelineConfig(),
-    )
-    for name in ("routed", "agg_template_tool"):
-        assert "BatchEvalPython" not in _plan(out[name])
+    routed = _routed(spark.createDataFrame(gen_transcripts(30)), caches)
+    for df in (routed, aggregate(routed)):
+        assert "BatchEvalPython" not in _plan(df)
 
 
 def test_zscore_group_stats_broadcast_no_window(spark):
@@ -135,32 +151,25 @@ def test_assign_pass2_no_exchange(spark):
     assert "Exchange" not in _plan(assigned)
 
 
-def test_route_broadcast_fallback_shape_and_equality(spark):
-    """broadcast_count_limit=0 must flip the count-table joins to shuffle
+def test_route_broadcast_fallback_shape_and_equality(spark, caches, monkeypatch):
+    """BROADCAST_COUNT_LIMIT=0 must flip the count-table joins to shuffle
     joins (no oversized broadcast at very long time ranges) AND produce
     bit-equal sink counts (VERDICT r3 next-round #5). Auto-broadcast is
     disabled so the planner cannot silently re-broadcast the small test
     tables and void the shape assertion."""
-    from log_analysis_ai_spark.config import PipelineConfig
-    from log_analysis_ai_spark.fixtures import gen_role_lookup, gen_tool_lookup, gen_transcripts
-    from log_analysis_ai_spark.pipeline import run_pipeline
+    from log_analysis_ai_spark import pipeline
+    from log_analysis_ai_spark.fixtures import gen_transcripts
 
     t = spark.createDataFrame(gen_transcripts(60))
-    tool_l = spark.createDataFrame(gen_tool_lookup())
-    role_l = spark.createDataFrame(gen_role_lookup())
-    base = run_pipeline(t, tool_l, role_l, PipelineConfig(), persist_keyed=False)
-    expect = sorted(map(tuple, base["sink_counts"].collect()))
+    expect = sorted(map(tuple, pipeline.sink_counts(_routed(t, caches)).collect()))
+    monkeypatch.setattr(pipeline, "BROADCAST_COUNT_LIMIT", 0)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        out = run_pipeline(
-            t, tool_l, role_l,
-            PipelineConfig(broadcast_count_limit=0),
-            persist_keyed=False,
-        )
-        plan = _plan(out["routed"])
+        routed = _routed(t, caches)
+        plan = _plan(routed)
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-        got = sorted(map(tuple, out["sink_counts"].collect()))
+        got = sorted(map(tuple, pipeline.sink_counts(routed).collect()))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     assert got == expect

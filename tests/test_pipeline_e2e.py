@@ -1,7 +1,8 @@
-"""End-to-end equality: Spark pipeline vs the pure-pandas oracle at sf-tiny
-(SURVEY.md §5.3). These are THE correctness gates from BASELINE.json:
-per-sink count equality, routed-row-set equality, per-turn text equality
-under (conv_id, turn_idx) ordering, template-set equality."""
+"""End-to-end equality: the checkpointed Spark pipeline (run_checkpointed)
+vs the pure-pandas oracle at sf-tiny (SURVEY.md §5.3). These are THE
+correctness gates from BASELINE.json: per-sink count equality, routed-row-set
+equality, per-turn text equality under (conv_id, turn_idx) ordering,
+template-set equality."""
 
 from __future__ import annotations
 
@@ -11,8 +12,9 @@ from pyspark.sql import functions as F
 
 from log_analysis_ai_spark.config import PipelineConfig
 from log_analysis_ai_spark.hashing import xxh64
+from log_analysis_ai_spark.job import run_checkpointed
+from log_analysis_ai_spark.lineage import SinkStore
 from log_analysis_ai_spark.oracle import run_oracle
-from log_analysis_ai_spark.pipeline import run_pipeline
 
 CFG = PipelineConfig()
 
@@ -24,10 +26,13 @@ def oracle(tiny_pdf, lookups_pdf):
 
 
 @pytest.fixture(scope="module")
-def spark_out(spark, tiny_pdf, lookups_pdf):
+def spark_out(spark, tiny_pdf, lookups_pdf, tmp_path_factory):
     tool_l, role_l = lookups_pdf
     df = spark.createDataFrame(tiny_pdf)
-    return run_pipeline(df, spark.createDataFrame(tool_l), spark.createDataFrame(role_l), CFG)
+    store = SinkStore(str(tmp_path_factory.mktemp("e2e_wh")))
+    return run_checkpointed(
+        spark, df, spark.createDataFrame(tool_l), spark.createDataFrame(role_l), store, CFG
+    )
 
 
 def test_xxhash64_parity_with_spark(spark):
@@ -157,7 +162,7 @@ def test_connected_components_union_find_parity(spark):
         assert got_dist == want, f"seed {seed} (distributed path)"
 
 
-def test_pipeline_empty_table_and_edge_texts(spark, lookups_pdf):
+def test_pipeline_empty_table_and_edge_texts(spark, lookups_pdf, tmp_path):
     """Verify-skill probes: an all-empty input table is a no-op (no crash,
     zero sinks); empty text routes to <EMPTY>; double space stays two
     tokens; unicode text survives byte-equal."""
@@ -168,9 +173,11 @@ def test_pipeline_empty_table_and_edge_texts(spark, lookups_pdf):
     schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
 
     empty = spark.createDataFrame([], schema)
-    out = run_pipeline(empty, tl, rl, CFG, persist_keyed=False)
+    out = run_checkpointed(spark, empty, tl, rl, SinkStore(str(tmp_path / "empty")), CFG)
     assert out["sink_counts"].count() == 0
     assert out["turns_parsed"].count() == 0
+    # the routed fanout wrote no file; its committed schema still reads back
+    assert out["routed"].count() == 0 and "template_class" in out["routed"].columns
 
     from datetime import datetime
 
@@ -181,7 +188,9 @@ def test_pipeline_empty_table_and_edge_texts(spark, lookups_pdf):
         ("c2", 0, "user", "a  b", "none", ts),
         ("c2", 1, "user", "a  b", "none", ts),
     ]
-    out2 = run_pipeline(spark.createDataFrame(rows, schema), tl, rl, CFG, persist_keyed=False)
+    out2 = run_checkpointed(
+        spark, spark.createDataFrame(rows, schema), tl, rl, SinkStore(str(tmp_path / "edge")), CFG
+    )
     got = {(r.conv_id, r.turn_idx): (r.text, r.template_str) for r in out2["turns_parsed"].collect()}
     assert got[("c1", 0)] == ("", dc.EMPTY_TEMPLATE)
     # unicode text byte-equal; the numeric token pre-masks

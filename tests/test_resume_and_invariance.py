@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from log_analysis_ai_spark.config import PipelineConfig
 from log_analysis_ai_spark.job import run_checkpointed
 from log_analysis_ai_spark.lineage import SinkStore
-from log_analysis_ai_spark.pipeline import run_pipeline
 
 CFG = PipelineConfig()
 
@@ -31,13 +30,17 @@ def frames(spark, tiny_pdf, lookups_pdf):
     )
 
 
-def test_partition_and_order_invariance(spark, frames):
+def _run(spark, t, tool_l, role_l, path, cfg=CFG) -> dict:
+    return run_checkpointed(spark, t, tool_l, role_l, SinkStore(str(path)), cfg)
+
+
+def test_partition_and_order_invariance(spark, frames, tmp_path):
     """Identical results when the input arrives in a different partitioning
     and a scrambled row order — the property that makes counts stable
     between N and 4N executors."""
     t, tool_l, role_l = frames
-    a = run_pipeline(t.repartition(2), tool_l, role_l, CFG)
-    b = run_pipeline(t.orderBy(F.desc("ts")).repartition(17), tool_l, role_l, CFG)
+    a = _run(spark, t.repartition(2), tool_l, role_l, tmp_path / "a")
+    b = _run(spark, t.orderBy(F.desc("ts")).repartition(17), tool_l, role_l, tmp_path / "b")
     assert _sink_counts(a) == _sink_counts(b)
     ta = {(r.template_id, r.template_str) for r in a["templates"].collect()}
     tb = {(r.template_id, r.template_str) for r in b["templates"].collect()}
@@ -133,7 +136,7 @@ def test_config_change_invalidates_checkpoint(spark, frames, tmp_path):
     assert out["sink_counts"].count() > 0
 
 
-def test_collapse_duplicate_lines_identical_results(spark, frames):
+def test_collapse_duplicate_lines_identical_results(spark, frames, tmp_path):
     """cfg.collapse_duplicate_lines must not change ANY output: the miner's
     unique-line shortcut already ignores repeats, and first-occurrence order
     is preserved by the min-struct, so catalogs, assignments and sink counts
@@ -143,8 +146,8 @@ def test_collapse_duplicate_lines_identical_results(spark, frames):
     dup = t.unionByName(t.withColumn("conv_id", F.concat(F.lit("zz-"), "conv_id"))).unionByName(
         t.withColumn("conv_id", F.concat(F.lit("zzz-"), "conv_id"))
     )
-    a = run_pipeline(dup, tool_l, role_l, PipelineConfig(collapse_duplicate_lines=False), persist_keyed=False)
-    b = run_pipeline(dup, tool_l, role_l, PipelineConfig(collapse_duplicate_lines=True), persist_keyed=False)
+    a = _run(spark, dup, tool_l, role_l, tmp_path / "a", PipelineConfig(collapse_duplicate_lines=False))
+    b = _run(spark, dup, tool_l, role_l, tmp_path / "b", PipelineConfig(collapse_duplicate_lines=True))
     assert _sink_counts(a) == _sink_counts(b)
     ta = {(r.template_id, r.template_str) for r in a["templates"].collect()}
     tb = {(r.template_id, r.template_str) for r in b["templates"].collect()}

@@ -187,7 +187,7 @@ def test_online_miner_equals_sequential_draintree(spark, tmp_path):
         (r.conv_id, r.turn_idx): r.template_str
         for r in spark.read.parquet(out_dir).collect()
     }
-    tree = dc.DrainTree(CFG.depth, CFG.sim_threshold, CFG.max_children)
+    tree = dc.DrainTree(CFG.depth, CFG.sim_threshold)
     want = {
         (r.conv_id, int(r.turn_idx)): tree.add_line(r.text) for _, r in pdf.iterrows()
     }
