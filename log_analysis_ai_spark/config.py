@@ -43,12 +43,3 @@ class PipelineConfig:
     # hourly event-time windows — BASELINE.json north_star)
     anomaly_min_count: int = 5   # window count below this => anomaly_flag
     rare_min_count: int = 10     # global template count below this => class 'rare'
-    # Pass-1 duplicate collapse: groupBy the line itself so the mine shuffle
-    # ships one row per DISTINCT (shard, salt, text) — first-occurrence
-    # order preserved via a min(conv_id, turn_idx) struct, so the mined
-    # catalog is IDENTICAL (the miner's unique-line shortcut already skips
-    # repeats; equality is tested). Worth it when logs are duplicate-heavy
-    # (the common production case); costs one extra aggregation stage, so
-    # it's off by default for mostly-unique corpora like parameterized
-    # transcripts.
-    collapse_duplicate_lines: bool = False

@@ -112,10 +112,7 @@ def run_checkpointed(
     turns_parsed = store.read_table(spark, "turns_parsed")
     templates = store.read_table(spark, "templates")
 
-    # stage 2: enrich + route -> routed (ONE partitioned fanout write).
-    # Partition keys are STRING copies (pt_*) of the sink keys: partition
-    # directory values always read back as strings, so partitioning on the
-    # boolean column directly would silently retype it on read.
+    # stage 2: enrich + route -> routed (ONE partitioned fanout write)
     if not (resume and store.committed("routed", fp)):
         route_caches: list = []
         routed = route(
@@ -123,13 +120,10 @@ def run_checkpointed(
             cfg,
             caches=route_caches,
         )
-        routed = routed.withColumn("pt_class", F.col("template_class")).withColumn(
-            "pt_anomaly", F.col("anomaly_flag").cast("string")
-        )
-        store.write_table(routed, "routed", fp, partition_by=["pt_class", "pt_anomaly"])
+        store.write_table(routed, "routed", fp, partition_by=["template_class", "anomaly_flag"])
         for c in route_caches:
             c.unpersist()
-    routed = store.read_table(spark, "routed").drop("pt_class", "pt_anomaly")
+    routed = store.read_table(spark, "routed")
 
     # stage 3: aggregates
     if not (resume and store.committed("agg_template_tool", fp)):

@@ -38,14 +38,16 @@ runtime-jar `writeTo()` path is mechanical — no jar ships in this sandbox):
   per-column value/null counts and bounds (so our readers cannot do
   metadata-only min/max pruning; Spark's parquet footer pruning still
   applies at scan time).
-- no schema-evolution or partition-spec metadata: schema lives in the
-  parquet files (a manifest records it only for a snapshot with no data
-  file, which a partitioned write of zero rows leaves); a column rename is
-  a rewrite here, a metadata edit in Iceberg.
+- schema: each manifest records its snapshot's schema (the written
+  DataFrame's columns, order and types, partition columns included), as
+  Iceberg's table metadata does; readers pin it instead of inferring it
+  from the files, so a read starts no Spark job and a partition column
+  keeps its type. There is no schema evolution or partition-spec metadata:
+  a column rename is a rewrite here, a metadata edit in Iceberg.
 - no row-level deletes (Iceberg v2 position/equality delete files):
   deletes are copy-on-write snapshot rewrites.
-- retention: last two snapshots, hardcoded, vs Iceberg's configurable
-  snapshot expiry + orphan-file GC.
+- retention: last `SNAPSHOTS_TO_KEEP` (two) snapshots, hardcoded, vs
+  Iceberg's configurable snapshot expiry + orphan-file GC.
 
 What IS equivalent (the semantics the north rule needs): atomic commits,
 immutable snapshots, always-readable tables during rewrite, per-partition
@@ -63,6 +65,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+SNAPSHOTS_TO_KEEP = 2
 
 
 def _scan_snapshot(snap_dir: str) -> tuple[list[dict], int, dict[str, int]]:
@@ -97,7 +101,6 @@ class SinkStore:
     """A warehouse directory holding the pipeline's derived tables."""
 
     root: str
-    snapshots_to_keep: int = 2
 
     def table_path(self, name: str) -> str:
         return os.path.join(self.root, name)
@@ -129,9 +132,6 @@ class SinkStore:
         snap = os.path.join(self.table_path(name), m["snapshot"])
         return snap if os.path.isdir(snap) else None
 
-    def exists(self, name: str) -> bool:
-        return self.snapshot_path(name) is not None
-
     # --- lineage -------------------------------------------------------------
     @property
     def lineage_path(self) -> str:
@@ -149,7 +149,9 @@ class SinkStore:
         Checks the LATEST committed lineage row for the stage (not any
         historical row — a warehouse reused across configs would otherwise
         resume-serve another config's tables) and cross-checks the
-        fingerprint stamped in the table's current manifest."""
+        fingerprint stamped in the table's current manifest. A manifest with
+        no recorded schema (written before manifests carried one) is not
+        committed: its stage recomputes rather than being read another way."""
         latest = None
         for r in self.lineage_rows():
             if r["stage"] == stage and r["status"] == "committed":
@@ -160,6 +162,7 @@ class SinkStore:
         return (
             m is not None
             and m.get("fingerprint") == fingerprint
+            and "schema" in m
             and self.snapshot_path(stage) is not None
         )
 
@@ -182,7 +185,8 @@ class SinkStore:
         One partitioned write for fanout sinks (NOT a per-sink filter loop —
         at cluster scale a loop would rescan the input once per sink). Row and
         per-partition metrics come from the written files' parquet footers —
-        no second read of the data."""
+        no second read of the data. The manifest records `df.schema` (column
+        order and types as written), which `read_table` reads back."""
         table_dir = self.table_path(name)
         mdir = self._manifest_dir(name)
         os.makedirs(mdir, exist_ok=True)
@@ -207,13 +211,9 @@ class SinkStore:
             "rows": n,
             "partitions": part_counts,
             "files": files,
+            "schema": df.schema.jsonValue(),
             "created_ts": time.time(),
         }
-        if not files:  # zero rows, partitioned: no file carries the schema
-            parts = partition_by or []
-            manifest["schema"] = StructType(
-                [f for f in df.schema.fields if f.name not in parts] + [df.schema[p] for p in parts]
-            ).jsonValue()
         manifest_name = f"manifest-{seq:06d}-{uid}.json"
         with open(os.path.join(mdir, manifest_name), "w") as f:
             json.dump(manifest, f)
@@ -222,7 +222,7 @@ class SinkStore:
         with open(tmp_ptr, "w") as f:
             json.dump({"manifest": manifest_name, "fingerprint": fingerprint, "seq": seq}, f)
         os.replace(tmp_ptr, self._current_path(name))
-        self._prune_snapshots(name, keep_from_seq=seq - self.snapshots_to_keep + 1)
+        self._prune_snapshots(name, keep_from_seq=seq - SNAPSHOTS_TO_KEEP + 1)
 
         row = {
             "stage": name,
@@ -253,13 +253,15 @@ class SinkStore:
     def read_table(self, spark: SparkSession, name: str) -> DataFrame:
         """Resolve via the manifest pointer — never a mutable directory path.
         The resolved snapshot dir is immutable, so the returned DataFrame
-        keeps working even if a newer commit lands mid-read. A snapshot with
-        no data file (a partitioned write of zero rows) reads back as an
-        empty DataFrame of the schema its manifest recorded."""
+        keeps working even if a newer commit lands mid-read. The read pins
+        the manifest's schema, so it starts no inference job, partition
+        columns keep their written types, and a snapshot with no data file
+        (a partitioned write of zero rows) reads back empty. Every field is
+        nullable, as with an inferring parquet read."""
         m = self.current_manifest(name)
         snap = None if m is None else os.path.join(self.table_path(name), m["snapshot"])
         if snap is None or not os.path.isdir(snap):
             raise FileNotFoundError(f"table {name!r} has no committed snapshot in {self.root}")
-        if not m["files"]:
-            return spark.createDataFrame([], StructType.fromJson(m["schema"]))
-        return spark.read.parquet(snap)
+        schema = StructType.fromJson(m["schema"])
+        # Spark appends partition columns last; select restores written order
+        return spark.read.schema(schema).parquet(snap).select(*schema.names)

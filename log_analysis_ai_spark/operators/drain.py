@@ -109,17 +109,7 @@ def mined_templates_df(df_with_keys: DataFrame, cfg: PipelineConfig) -> DataFram
     dominated pass 1 (~40k groups at 6M rows). Hash co-location gives every
     (shard, salt) to exactly one partition; a pandas groupby inside the
     partition runs the sequential miner per sub-shard in canonical
-    (conv_id, turn_idx) order. Preprocess vectorizes once per partition.
-
-    Optional duplicate collapse BEFORE the wire (cfg.collapse_duplicate_
-    lines): the miner's unique-line shortcut means only the FIRST occurrence
-    of each distinct (shard, salt, text) participates, and the sequence of
-    first occurrences in canonical order is exactly "distinct lines ordered
-    by their first (conv_id, turn_idx)". GroupBy-ing on the line itself with
-    a min-struct collapses repeats map-side so the shuffle ships one row per
-    DISTINCT line — the right shape for duplicate-heavy production logs; an
-    extra aggregation stage that doesn't pay for itself on mostly-unique
-    parameterized corpora (hence the config default)."""
+    (conv_id, turn_idx) order. Preprocess vectorizes once per partition."""
     sim = cfg.sim_threshold
     pats = tuple(cfg.preprocess_patterns)
 
@@ -153,12 +143,6 @@ def mined_templates_df(df_with_keys: DataFrame, cfg: PipelineConfig) -> DataFram
     lines = df_with_keys.filter(F.col("text") != "").select(
         "conv_id", "turn_idx", "text", "shard_key", "salt"
     )
-    if cfg.collapse_duplicate_lines:
-        lines = (
-            lines.groupBy("shard_key", "salt", "text")
-            .agg(F.min(F.struct("conv_id", "turn_idx")).alias("_first"))
-            .select("shard_key", "salt", "text", "_first.conv_id", "_first.turn_idx")
-        )
     return (
         lines.repartition(n_parts, "shard_key", "salt")
         .mapInPandas(mine_parts, schema="shard_key string, salt int, pos int, template string")

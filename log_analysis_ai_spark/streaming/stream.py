@@ -40,6 +40,28 @@ from ..hashing import template_id
 from ..operators.drain import assign_templates, preprocess_series, with_shard_key
 
 
+def _replace_batch(df: DataFrame, batch_id: int, path: str) -> None:
+    """Exactly-once sink write: foreachBatch is at-least-once (a batch that
+    fails after its write is retried with the same batch_id), so the write
+    must be an idempotent REPLACE of this batch's partition — dynamic
+    partition overwrite on _batch_id, not a blind append."""
+    (
+        df.withColumn("_batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("_batch_id")
+        .parquet(path)
+    )
+
+
+def _start(stream_df: DataFrame, handle, checkpoint: str, trigger_available_now: bool):
+    """Run *handle* on each micro-batch of *stream_df*; returns the StreamingQuery."""
+    writer = stream_df.writeStream.foreachBatch(handle).option("checkpointLocation", checkpoint)
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def stream_lines(
     spark: SparkSession, path: str, schema: str, fmt: str = "json", max_files_per_trigger: int = 8
 ) -> DataFrame:
@@ -105,31 +127,12 @@ def stream_pipeline(
             return
         if dead_letter_path is not None:
             dead, batch_df = split_rejects(batch_df)
-            (
-                dead.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(dead_letter_path)
-            )
+            _replace_batch(dead, batch_id, dead_letter_path)
         keyed = with_shard_key(batch_df, cfg)
         assigned = assign_templates(keyed, catalogs, cfg).drop("salt", "shard_key")
-        # exactly-once sink: foreachBatch is at-least-once (a batch that
-        # fails after its write is retried with the same batch_id), so the
-        # write must be an idempotent REPLACE of this batch's partition —
-        # dynamic partition overwrite on _batch_id, not a blind append
-        (
-            assigned.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out_path)
-        )
+        _replace_batch(assigned, batch_id, out_path)
 
-    writer = stream_df.writeStream.foreachBatch(handle).option("checkpointLocation", checkpoint)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, handle, checkpoint, trigger_available_now)
 
 
 ONLINE_OUT_SCHEMA = (
@@ -428,18 +431,9 @@ def stream_pipeline_online(
     )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out_path)
-        )
+        _replace_batch(batch_df, batch_id, out_path)
 
-    writer = mined.writeStream.foreachBatch(handle).option("checkpointLocation", checkpoint)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(mined, handle, checkpoint, trigger_available_now)
 
 
 def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
@@ -521,26 +515,14 @@ def incremental_dedup_batch(
                 k=k, bands=bands, shingle_n=shingle_n, caches=caches,
             )
             if pairs_path is not None:
-                (
-                    matches.withColumn("_batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("_batch_id")
-                    .parquet(pairs_path)
-                )
+                _replace_batch(matches, batch_id, pairs_path)
             dup_ids = matches.select(F.col("new_id").alias(id_col)).distinct()
             kept = survivors.join(dup_ids, id_col, "left_anti")
         else:
             kept = survivors
 
         # 3. exactly-once doc sink (idempotent replace of this partition)
-        (
-            kept.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out_path)
-        )
+        _replace_batch(kept, batch_id, out_path)
         # 4. at-least-once index append (result-idempotent; see docstring)
         build_minhash_index(
             spark.read.parquet(out_path).filter(F.col("_batch_id") == F.lit(batch_id)),
@@ -576,12 +558,7 @@ def stream_incremental_dedup(
             spark, batch_df, batch_id, index_table, out_path, **batch_kwargs
         )
 
-    writer = stream_df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, handle, checkpoint, trigger_available_now)
 
 
 def stream_curate(
@@ -635,17 +612,6 @@ def stream_curate(
             .withColumn("reason", F.coalesce(F.col("_reason"), F.lit("kept")))
             .drop("_reason")
         )
-        (
-            out.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out_path)
-        )
+        _replace_batch(out, batch_id, out_path)
 
-    writer = stream_df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, handle, checkpoint, trigger_available_now)

@@ -4,7 +4,10 @@ the true local[8]-vs-local[32] run is bench.py's scaling report)."""
 
 from __future__ import annotations
 
+import json
+import os
 import shutil
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -82,13 +85,67 @@ def test_resume_is_idempotent(spark, frames, tmp_path):
     assert all(r["partitions"] for r in routed_rows)
     assert sum(routed_rows[-1]["partitions"].values()) == sum(clean.values())
 
+    # a manifest without a recorded schema (the layout before manifests
+    # carried one) is not committed: resume recomputes that stage
+    fp = routed_rows[-1]["fingerprint"]
+    with open(store._current_path("routed")) as f:
+        mpath = os.path.join(store._manifest_dir("routed"), json.load(f)["manifest"])
+    with open(mpath) as f:
+        manifest = json.load(f)
+    del manifest["schema"]
+    with open(mpath, "w") as f:
+        json.dump(manifest, f)
+    assert not store.committed("routed", fp)
+    out4 = run_checkpointed(spark, t, tool_l, role_l, store, CFG, resume=True, input_desc="tiny")
+    assert _sink_counts(out4) == clean
+    assert store.committed("routed", fp)
+    assert sum(r["stage"] == "routed" for r in store.lineage_rows()) == 3
+    assert sum(r["stage"] == "turns_parsed" for r in store.lineage_rows()) == 1
+
+
+def _row_bag(df) -> Counter:
+    return Counter(
+        json.dumps(r.asDict(recursive=True), sort_keys=True, default=str) for r in df.collect()
+    )
+
+
+def test_read_table_pins_manifest_schema(spark, frames, tmp_path):
+    """Every committed table reads back through its manifest's schema: no
+    Spark job (no schema inference), the written columns in written order
+    with their written types, and the same rows. `routed` is partitioned on
+    its own sink keys, and its boolean `anomaly_flag` reads back boolean."""
+    t, tool_l, role_l = frames
+    written = {}
+
+    class CapturingStore(SinkStore):
+        def write_table(self, df, name, *args, **kwargs):
+            written[name] = (df.schema, _row_bag(df))
+            return super().write_table(df, name, *args, **kwargs)
+
+    run_checkpointed(spark, t, tool_l, role_l, CapturingStore(str(tmp_path)), CFG)
+    assert set(written) == {
+        "dead_letter", "turns_parsed", "templates", "routed", "agg_template_tool", "sink_counts"
+    }
+    store, sc = SinkStore(str(tmp_path)), spark.sparkContext
+    for name, (schema, rows) in written.items():
+        group = f"read-{name}-{tmp_path.name}"
+        sc.setJobGroup(group, "read_table")
+        try:
+            df = store.read_table(spark, name)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], name
+        assert [(f.name, f.dataType) for f in df.schema] == [
+            (f.name, f.dataType) for f in schema
+        ], name
+        assert _row_bag(df) == rows, name
+    assert dict(store.read_table(spark, "routed").dtypes)["anomaly_flag"] == "boolean"
+
 
 def test_snapshot_isolation_on_overwrite(spark, tmp_path):
     """Iceberg-semantic commits: a reader that resolved the table before an
     overwrite still sees its snapshot (the round-1 rmtree+rename had a window
     where the table vanished); retention keeps exactly the last 2 snapshots."""
-    import os
-
     store = SinkStore(str(tmp_path / "wh_snap"))
     store.write_table(spark.range(10).withColumn("v", F.lit("a")), "t", "fp1")
     old_reader = store.read_table(spark, "t")  # resolves snap-000001
@@ -134,27 +191,6 @@ def test_config_change_invalidates_checkpoint(spark, frames, tmp_path):
     # different fingerprint -> stages recomputed (2 committed rows per stage)
     assert sum(r["stage"] == "turns_parsed" for r in store.lineage_rows()) == 2
     assert out["sink_counts"].count() > 0
-
-
-def test_collapse_duplicate_lines_identical_results(spark, frames, tmp_path):
-    """cfg.collapse_duplicate_lines must not change ANY output: the miner's
-    unique-line shortcut already ignores repeats, and first-occurrence order
-    is preserved by the min-struct, so catalogs, assignments and sink counts
-    are bit-identical with the collapse on or off."""
-    t, tool_l, role_l = frames
-    # duplicate-heavy variant: triple every row under fresh conv ids
-    dup = t.unionByName(t.withColumn("conv_id", F.concat(F.lit("zz-"), "conv_id"))).unionByName(
-        t.withColumn("conv_id", F.concat(F.lit("zzz-"), "conv_id"))
-    )
-    a = _run(spark, dup, tool_l, role_l, tmp_path / "a", PipelineConfig(collapse_duplicate_lines=False))
-    b = _run(spark, dup, tool_l, role_l, tmp_path / "b", PipelineConfig(collapse_duplicate_lines=True))
-    assert _sink_counts(a) == _sink_counts(b)
-    ta = {(r.template_id, r.template_str) for r in a["templates"].collect()}
-    tb = {(r.template_id, r.template_str) for r in b["templates"].collect()}
-    assert ta == tb
-    ra = a["turns_parsed"].select("conv_id", "turn_idx", "template_id")
-    rb = b["turns_parsed"].select("conv_id", "turn_idx", "template_id")
-    assert ra.exceptAll(rb).count() == 0 and rb.exceptAll(ra).count() == 0
 
 
 def test_dead_letter_routes_malformed_rows(spark, frames, tmp_path):
