@@ -17,6 +17,7 @@ events fixture on which Drain's templates are provably SQL-computable.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -84,7 +85,7 @@ def entry(spark: SparkSession) -> DataFrame:
             "INFO: event %s by user %d value %d", "event_type", "user_id", F.floor("value").cast("long")
         ).alias("text"),
     )
-    assigned, _, _ = mine_and_assign(lines, PipelineConfig(salt_buckets=2), persist=False)
+    assigned, _ = mine_and_assign(lines, PipelineConfig(salt_buckets=2))
     return Q.template_frequency(assigned)
 
 
@@ -1280,7 +1281,7 @@ def _pipeline_template_counts(spark, sf_dir):
     from log_analysis_ai_spark.queries import template_frequency
 
     t = _pipeline_oracle_transcripts(spark, sf_dir)
-    assigned, _, _ = mine_and_assign(t, PipelineConfig(), persist=False)
+    assigned, _ = mine_and_assign(t, PipelineConfig())
     return (
         template_frequency(assigned)
         .select("template_str", F.col("count").alias("n"))
@@ -2063,9 +2064,16 @@ def _events_scrub_pii(spark, sf_dir):
     return lines.select("event_id", scrub_pii("raw").alias("clean")).orderBy("event_id")
 
 
+@functools.lru_cache(maxsize=None)
+def _store_dir(tag: str, sf_dir: str) -> str:
+    """`_scratch` once per (tag, sf_dir) per process: emptied on first use,
+    then kept, so the lazy tables an earlier query returned stay readable."""
+    return _scratch(f"{tag}_wh", sf_dir)
+
+
 def _pipeline_checkpointed(spark, sf_dir, tag: str, transcripts) -> dict:
-    """run_checkpointed into a per-process scratch store; the returned
-    tables read its committed snapshots."""
+    """run_checkpointed (resume=True) into the store of (tag, sf_dir): the
+    first call with a tag writes it, later calls read its committed tables."""
     from log_analysis_ai_spark.config import PipelineConfig
     from log_analysis_ai_spark.fixtures import gen_role_lookup, gen_tool_lookup
     from log_analysis_ai_spark.job import run_checkpointed
@@ -2074,7 +2082,7 @@ def _pipeline_checkpointed(spark, sf_dir, tag: str, transcripts) -> dict:
     return run_checkpointed(
         spark, transcripts,
         spark.createDataFrame(gen_tool_lookup()), spark.createDataFrame(gen_role_lookup()),
-        SinkStore(_scratch(f"{tag}_wh", sf_dir)), PipelineConfig(),
+        SinkStore(_store_dir(tag, sf_dir)), PipelineConfig(),
         input_desc=f"{tag}_oracle",
     )
 
@@ -2108,13 +2116,13 @@ def _pipeline_dead_letter(spark, sf_dir):
 
 def _pipeline_sink_counts(spark, sf_dir):
     t = _pipeline_oracle_transcripts(spark, sf_dir)
-    out = _pipeline_checkpointed(spark, sf_dir, "sinkcounts", t)
+    out = _pipeline_checkpointed(spark, sf_dir, "pipeline", t)
     return out["sink_counts"].orderBy("template_class", "anomaly_flag")
 
 
 def _pipeline_agg_template_tool(spark, sf_dir):
     t = _pipeline_oracle_transcripts(spark, sf_dir)
-    out = _pipeline_checkpointed(spark, sf_dir, "aggtool", t)
+    out = _pipeline_checkpointed(spark, sf_dir, "pipeline", t)
     return (
         out["agg_template_tool"]
         .join(F.broadcast(out["templates"].select("template_id", "template_str")), "template_id")

@@ -95,7 +95,7 @@ def run_checkpointed(
     if not (resume and store.committed("turns_parsed", fp) and store.committed("templates", fp)):
         parsed = parse(transcripts)
         t0 = time.time()
-        assigned, templates, keyed = mine(parsed, cfg)
+        assigned, templates = mine(parsed, cfg)
         mine_s = round(time.time() - t0, 3)
         store.write_table(assigned, "turns_parsed", fp)
         # the catalog size comes from the committed snapshot's footers, not
@@ -108,21 +108,15 @@ def run_checkpointed(
                 "wall_s": mine_s, "status": "computed", "ts": time.time(),
             }
         )
-        keyed.unpersist()
     turns_parsed = store.read_table(spark, "turns_parsed")
     templates = store.read_table(spark, "templates")
 
     # stage 2: enrich + route -> routed (ONE partitioned fanout write)
     if not (resume and store.committed("routed", fp)):
-        route_caches: list = []
         routed = route(
-            enrich(turns_parsed.drop(*ROUTED_DROP_COLS), tool_lookup, role_lookup),
-            cfg,
-            caches=route_caches,
+            enrich(turns_parsed.drop(*ROUTED_DROP_COLS), tool_lookup, role_lookup), cfg
         )
         store.write_table(routed, "routed", fp, partition_by=["template_class", "anomaly_flag"])
-        for c in route_caches:
-            c.unpersist()
     routed = store.read_table(spark, "routed")
 
     # stage 3: aggregates

@@ -37,8 +37,7 @@ def compute_once(df: DataFrame, caches: list | None = None) -> DataFrame:
     Two modes:
     - `caches` given (fault-tolerant path for long batch jobs): persist
       MEMORY_AND_DISK and append the handle; the CALLER unpersists after
-      materializing downstream results (as job.run_checkpointed does for
-      pipeline.route's count table).
+      materializing downstream results.
       Persisted blocks keep lineage, so an executor loss recomputes.
     - `caches` None (default, interactive/one-shot calls): lazy
       localCheckpoint — computed on first action, shared by every scan,

@@ -11,10 +11,12 @@ deterministically (salt order, identical masked forms collapse).
 
 Pass 2 (assign): the merged catalog (small — templates ≪ rows) is broadcast
 and every row is re-matched against the FINAL templates of its shard inside
-``mapInPandas``. Assignment is a pure function of (line, catalog), so the
-result is bit-identical at any parallelism level — this is what makes
-per-sink counts stable between N and 4N executors, unlike the reference's
-arrival-ordered cluster ids (reference: src/drain_parser.cpp:547).
+``mapInPandas``; it reads the plain input and keys each batch from the text
+it already preprocesses, so nothing is cached between the passes.
+Assignment is a pure function of (line, catalog), so the result is
+bit-identical at any parallelism level — this is what makes per-sink counts
+stable between N and 4N executors, unlike the reference's arrival-ordered
+cluster ids (reference: src/drain_parser.cpp:547).
 
 Deviation — max_children overflow: the reference routes the >Nth distinct
 child at a tree level to a shared ``<*>`` node (src/drain_parser.cpp:317-332);
@@ -62,14 +64,12 @@ def preprocess_series(s: pd.Series, patterns: tuple[str, ...] | None = None) -> 
     return out
 
 
-def _shard_keys(texts: pd.Series, depth: int, patterns: tuple[str, ...] | None = None) -> pd.Series:
-    """Shard keys: token count + masked depth-prefix. Preprocess is the
-    vectorized regex pass; the key build is a tight Python loop — measured
-    FASTER than the equivalent pandas .str pipeline (object-dtype .str ops
-    pay more per kernel than one fused loop; ~4µs/row either way, inside an
-    Arrow-batched UDF)."""
-    raw = texts.fillna("")
-    pre = preprocess_series(raw, patterns)
+def _shard_keys(raw, pre, depth: int) -> list[str]:
+    """Shard keys (token count + masked depth-prefix) of the preprocessed
+    lines `pre`, for both passes; `raw` (NULL as "") keys empty text "0|".
+    A tight Python loop — measured FASTER than the equivalent pandas .str
+    pipeline (object-dtype .str ops pay more per kernel than one fused loop;
+    ~4µs/row either way, inside an Arrow-batched UDF)."""
     fm = _NUM.fullmatch
     wc = dc.WILDCARD
     keys = []
@@ -80,7 +80,7 @@ def _shard_keys(texts: pd.Series, depth: int, patterns: tuple[str, ...] | None =
         t = p.split(" ")
         n = len(t)
         keys.append(f"{n}|" + " ".join(wc if fm(x) else x for x in t[:depth]))
-    return pd.Series(keys, index=texts.index, dtype="object")
+    return keys
 
 
 def with_shard_key(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -90,7 +90,8 @@ def with_shard_key(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
     @F.pandas_udf("string")
     def shard_key_udf(s: pd.Series) -> pd.Series:
-        return _shard_keys(s, depth, pats)
+        raw = s.fillna("")
+        return pd.Series(_shard_keys(raw, preprocess_series(raw, pats), depth), index=s.index)
 
     return df.withColumn("shard_key", shard_key_udf(F.col("text"))).withColumn(
         "salt", F.pmod(F.xxhash64(F.col("conv_id")), F.lit(cfg.salt_buckets)).cast("int")
@@ -197,10 +198,10 @@ _EMPTY_VALS: list[str] = []  # shared, never mutated
 _EMPTY_ID = template_id(dc.EMPTY_TEMPLATE)
 
 
-def _assign_pdf(pdf: pd.DataFrame, cand_for, sim: float, pats: tuple) -> pd.DataFrame:
+def _assign_pdf(pdf: pd.DataFrame, cand_for, sim: float, pats: tuple, depth: int) -> pd.DataFrame:
     """Match one pandas batch against its shards' candidates (cand_for:
     shard_key -> expanded candidate list) — emits template_id /
-    template_str / _pvals."""
+    template_str / _pvals. Shard keys come from the batch's own text."""
     pdf = pdf.reset_index(drop=True)
     texts = pdf["text"].astype(str)
     pre_np = preprocess_series(texts, pats).to_numpy()
@@ -209,8 +210,9 @@ def _assign_pdf(pdf: pd.DataFrame, cand_for, sim: float, pats: tuple) -> pd.Data
     strs = np.full(n, dc.EMPTY_TEMPLATE, dtype=object)
     pvals: list = [_EMPTY_VALS] * n
     nonempty = texts != ""
+    keys = pd.Series(_shard_keys(pdf["text"].fillna(""), pre_np, depth), dtype="object")[nonempty]
     # .groups: row labels == positions (index was reset above)
-    for skey, rows in pdf[nonempty].groupby("shard_key").groups.items():
+    for skey, rows in keys.groupby(keys).groups.items():
         rows = np.asarray(rows)
         # all rows of a shard share token count (the key embeds it),
         # so the token matrix is a dense 2-D object array
@@ -251,13 +253,13 @@ def _assign_pdf(pdf: pd.DataFrame, cand_for, sim: float, pats: tuple) -> pd.Data
     return out
 
 
-def _assign_out_schema(df_with_keys: DataFrame) -> str:
+def _assign_out_schema(df: DataFrame) -> str:
     # Python emits only the wildcard-position TOKENS (`_pvals`); the
     # params map itself is assembled JVM-side (_attach_params) so no
     # per-row dict is ever built in Python — and when a downstream plan
     # drops `params`, Catalyst prunes the whole map build for free.
     return ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df_with_keys.schema.fields
+        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     ) + ", template_id long, template_str string, _pvals array<string>"
 
 
@@ -276,11 +278,11 @@ def _attach_params(mapped: DataFrame) -> DataFrame:
 
 
 def assign_templates(
-    df_with_keys: DataFrame, catalogs: dict[str, list[list[str]]], cfg: PipelineConfig
+    df: DataFrame, catalogs: dict[str, list[list[str]]], cfg: PipelineConfig
 ) -> DataFrame:
-    """Pass 2: broadcast the final catalog; match every row; emit
-    template_id / template_str / params columns."""
-    spark = df_with_keys.sparkSession
+    """Pass 2: broadcast the final catalog; match every row; append
+    template_id / template_str / params columns to `df`'s own."""
+    spark = df.sparkSession
     # broadcast SLIM: template strings only — ids, token lists, wildcard
     # positions and param names are derivable, so each worker rebuilds them
     # once per shard (cached across Arrow batches) instead of the driver
@@ -288,10 +290,10 @@ def assign_templates(
     # broadcast build is the one non-distributed step of pass 2)
     slim = {skey: [" ".join(tpl) for tpl in cats] for skey, cats in catalogs.items()}
     bc = spark.sparkContext.broadcast(slim)
-    sim = cfg.sim_threshold
+    sim, depth = cfg.sim_threshold, cfg.depth
     pats = tuple(cfg.preprocess_patterns)
 
-    expanded: dict[str, list] = {}  # worker-local cache, persists across batches
+    expanded: dict[str, list] = {}  # worker-local cache, kept across batches
 
     def _cand(skey: str) -> list:
         c = expanded.get(skey)
@@ -302,9 +304,9 @@ def assign_templates(
 
     def assign_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield _assign_pdf(pdf, _cand, sim, pats)
+            yield _assign_pdf(pdf, _cand, sim, pats, depth)
 
-    mapped = df_with_keys.mapInPandas(assign_fn, schema=_assign_out_schema(df_with_keys))
+    mapped = df.mapInPandas(assign_fn, schema=_assign_out_schema(df))
     return _attach_params(mapped)
 
 
@@ -332,22 +334,13 @@ def templates_table(spark: SparkSession, catalogs: dict[str, list[list[str]]]) -
 
 
 def mine_and_assign(
-    df: DataFrame, cfg: PipelineConfig | None = None, persist: bool = True
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """End-to-end two-pass Drain.
+    df: DataFrame, cfg: PipelineConfig | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """End-to-end two-pass Drain: (assigned turns, templates table).
 
-    Returns (assigned turns, templates table, keyed handle). The keyed
-    DataFrame (input + shard_key/salt) is persisted so pass 1's shuffle and
-    pass 2's re-match share one shard-key computation; the caller unpersists
-    the handle after materializing `assigned` (job.py does)."""
+    Pass 1 mines over `with_shard_key(df)`; pass 2 matches the plain `df`
+    and keys each Arrow batch itself, so no keyed frame is cached between
+    the passes and no working column reaches the output."""
     cfg = cfg or PipelineConfig()
-    keyed = with_shard_key(df, cfg)
-    if persist:
-        keyed = keyed.persist()
-    catalogs = mine_catalog(keyed, cfg)  # action: populates the cache
-    # drop the working columns: shard_key is a ~30-byte string per row that
-    # no downstream stage reads — keeping it inflated the turns_parsed and
-    # routed table writes (templates records xxh64(shard_key) for lineage)
-    assigned = assign_templates(keyed, catalogs, cfg).drop("salt", "shard_key")
-    templates = templates_table(df.sparkSession, catalogs)
-    return assigned, templates, keyed
+    catalogs = mine_catalog(with_shard_key(df, cfg), cfg)
+    return assign_templates(df, catalogs, cfg), templates_table(df.sparkSession, catalogs)

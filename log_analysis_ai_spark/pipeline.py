@@ -31,12 +31,6 @@ from .operators.drain import mine_and_assign
 # all shrink. turns_parsed itself keeps the full schema.
 ROUTED_DROP_COLS = ("params", "detected_ts")
 
-# route() joins the count tables back by broadcast while they stay under
-# this many rows; above it (#windows × #templates over a very long time
-# range) it falls back to a shuffle join instead of shipping an oversized
-# broadcast to every executor.
-BROADCAST_COUNT_LIMIT = 2_000_000
-
 
 def parse(df: DataFrame) -> DataFrame:
     """Vectorized field extraction over the text column (the grok stage).
@@ -51,9 +45,8 @@ def parse(df: DataFrame) -> DataFrame:
     )
 
 
-def mine(df: DataFrame, cfg: PipelineConfig) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Two-pass Drain (operators/drain.py):
-    (turns+template cols, templates, cached keyed handle)."""
+def mine(df: DataFrame, cfg: PipelineConfig) -> tuple[DataFrame, DataFrame]:
+    """Two-pass Drain (operators/drain.py): (turns+template cols, templates)."""
     return mine_and_assign(df, cfg)
 
 
@@ -64,7 +57,7 @@ def enrich(df: DataFrame, tool_lookup: DataFrame, role_lookup: DataFrame) -> Dat
     )
 
 
-def route(df: DataFrame, cfg: PipelineConfig, caches: list) -> DataFrame:
+def route(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Frequency-based rarity scoring over event-time windows + sink keys.
 
     Counts are computed as partial-aggregated groupBys and broadcast-joined
@@ -72,45 +65,31 @@ def route(df: DataFrame, cfg: PipelineConfig, caches: list) -> DataFrame:
     funnel every row of a hot template through one task at 10^12 rows, and
     a shuffle join would move the wide fact twice. The count tables are
     bounded by (#windows × #templates) ≪ rows — catalog-sized, so the
-    explicit broadcast hint keeps the fact table unshuffled end-to-end.
+    explicit broadcast hints keep the fact table unshuffled end-to-end.
     anomaly_flag = window count below threshold; template_class from
     param-count + global frequency (FIXTURES.md §4 sink key space).
 
-    EAGER: this function runs one Spark action at plan-build time (the
-    count that materializes the persisted count table and sizes the
-    broadcast guard). The cache is persist(MEMORY_AND_DISK), NOT
-    localCheckpoint — persisted blocks keep their lineage, so an executor
-    loss/decommission mid-job recomputes instead of failing (the property
-    that matters at 1000-executor scale). The persisted handle is appended
-    to `caches`; the caller unpersists it once the routed table is
-    committed (job.run_checkpointed does)."""
+    Lazy: building the plan runs no Spark job and holds no cached table.
+    The global counts roll up the window counts. The null filter makes both
+    count branches one plan: without it the optimizer infers a different
+    IS NOT NULL filter under each join (both keys vs template_id only), and
+    the window counts are computed twice; with it, AQE reads the window-count
+    shuffle back as a ReusedExchange. The inner joins drop NULL-key rows
+    anyway, so no output row changes. A count table past Spark's broadcast
+    size limit fails the job loudly; it never returns other rows."""
     df = df.withColumn("window_start", F.date_trunc("hour", F.col("ts")))
-    # ONE scan of the fact table builds the window counts; materializing the
-    # (windows × templates)-sized result lets both broadcast joins AND the
-    # global rollup read it without re-scanning 10^12 fact rows per branch
-    # (Spark has no cross-branch subplan reuse below the exchange level)
     window_counts = (
-        df.groupBy("window_start", "template_id")
+        df.filter(F.col("window_start").isNotNull() & F.col("template_id").isNotNull())
+        .groupBy("window_start", "template_id")
         .agg(F.count(F.lit(1)).alias("window_count"))
-        .persist()
     )
-    caches.append(window_counts)
     global_counts = window_counts.groupBy("template_id").agg(
         F.sum("window_count").alias("global_count")
     )
-    # size guard: the count tables are usually catalog-sized and broadcast
-    # (fact table never shuffles), but #windows × #templates grows with the
-    # queried time range — past the limit a broadcast would OOM executors,
-    # so fall back to a shuffle join (this count also materializes the
-    # persisted cache). global_counts ≤ window_counts, so one check covers
-    # both.
-    small = window_counts.count() <= BROADCAST_COUNT_LIMIT
-    wjoin = F.broadcast(window_counts) if small else window_counts
-    gjoin = F.broadcast(global_counts) if small else global_counts
     n_params = F.size(F.split(F.col("template_str"), r"<\*>")) - F.lit(1)
     return (
-        df.join(wjoin, ["window_start", "template_id"])
-        .join(gjoin, ["template_id"])
+        df.join(F.broadcast(window_counts), ["window_start", "template_id"])
+        .join(F.broadcast(global_counts), ["template_id"])
         .withColumn("rarity_score", F.lit(1.0) / F.col("window_count"))
         .withColumn("anomaly_flag", F.col("window_count") < F.lit(cfg.anomaly_min_count))
         .withColumn(

@@ -128,9 +128,7 @@ def stream_pipeline(
         if dead_letter_path is not None:
             dead, batch_df = split_rejects(batch_df)
             _replace_batch(dead, batch_id, dead_letter_path)
-        keyed = with_shard_key(batch_df, cfg)
-        assigned = assign_templates(keyed, catalogs, cfg).drop("salt", "shard_key")
-        _replace_batch(assigned, batch_id, out_path)
+        _replace_batch(assign_templates(batch_df, catalogs, cfg), batch_id, out_path)
 
     return _start(stream_df, handle, checkpoint, trigger_available_now)
 

@@ -100,7 +100,7 @@ def test_custom_preprocess_patterns_engine_and_oracle(spark):
         ("c1", 1, "2024-01-01T10:00:00 stays because iso pattern was replaced x"),
     ]
     df = spark.createDataFrame(pd.DataFrame(rows, columns=["conv_id", "turn_idx", "text"]))
-    assigned, templates, _ = mine_and_assign(df, cfg, persist=False)
+    assigned, templates = mine_and_assign(df, cfg)
     got = {r.conv_id + str(r.turn_idx): r.template_str for r in assigned.collect()}
     # REQID/bracket prefixes stripped -> the three fetch lines share a shard
     # and merge; the ISO timestamp is NOT stripped (custom set replaced it)

@@ -8,8 +8,6 @@ Python (BatchEvalPython) appears anywhere — Python is Arrow-vectorized only.
 
 from __future__ import annotations
 
-import pytest
-
 import __spark_entry__ as entry
 
 SF = "/root/testdata/sf0.001"
@@ -49,35 +47,27 @@ def test_topk_compiles_to_take_ordered(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def _routed(t, caches: list):
-    """route(enrich(mine(parse(t)))) as a lazy plan, slimmed the way
-    run_checkpointed slims it; the persisted handles go to `caches`."""
+def _enriched(t):
+    """enrich(mine(parse(t))) as a lazy plan, slimmed the way run_checkpointed
+    slims it before route()."""
     from log_analysis_ai_spark.config import PipelineConfig
     from log_analysis_ai_spark.fixtures import gen_role_lookup, gen_tool_lookup
-    from log_analysis_ai_spark.pipeline import ROUTED_DROP_COLS, enrich, mine, parse, route
+    from log_analysis_ai_spark.pipeline import ROUTED_DROP_COLS, enrich, mine, parse
 
-    cfg, lookup = PipelineConfig(), t.sparkSession.createDataFrame
-    assigned, _, keyed = mine(parse(t), cfg)
-    caches.append(keyed)
+    lookup = t.sparkSession.createDataFrame
+    assigned, _ = mine(parse(t), PipelineConfig())
     tool_l, role_l = lookup(gen_tool_lookup()), lookup(gen_role_lookup())
-    return route(enrich(assigned.drop(*ROUTED_DROP_COLS), tool_l, role_l), cfg, caches)
+    return enrich(assigned.drop(*ROUTED_DROP_COLS), tool_l, role_l)
 
 
-@pytest.fixture()
-def caches():
-    held: list = []
-    yield held
-    for c in held:
-        c.unpersist()
-
-
-def test_no_row_at_a_time_python_udf_anywhere(spark, caches):
+def test_no_row_at_a_time_python_udf_anywhere(spark):
     """BatchEvalPython = per-row Python serde; the engine must only ever use
     Arrow evals (ArrowEvalPython / mapInPandas / FlatMapGroupsInPandas)."""
+    from log_analysis_ai_spark.config import PipelineConfig
     from log_analysis_ai_spark.fixtures import gen_transcripts
-    from log_analysis_ai_spark.pipeline import aggregate
+    from log_analysis_ai_spark.pipeline import aggregate, route
 
-    routed = _routed(spark.createDataFrame(gen_transcripts(30)), caches)
+    routed = route(_enriched(spark.createDataFrame(gen_transcripts(30))), PipelineConfig())
     for df in (routed, aggregate(routed)):
         assert "BatchEvalPython" not in _plan(df)
 
@@ -146,33 +136,61 @@ def test_assign_pass2_no_exchange(spark):
 
     cfg = PipelineConfig(salt_buckets=2)
     t = spark.read.parquet(materialize_transcripts(60))
-    keyed = with_shard_key(t, cfg)
-    assigned = assign_templates(keyed, mine_catalog(keyed, cfg), cfg)
+    assigned = assign_templates(t, mine_catalog(with_shard_key(t, cfg), cfg), cfg)
     assert "Exchange" not in _plan(assigned)
 
 
-def test_route_broadcast_fallback_shape_and_equality(spark, caches, monkeypatch):
-    """BROADCAST_COUNT_LIMIT=0 must flip the count-table joins to shuffle
-    joins (no oversized broadcast at very long time ranges) AND produce
-    bit-equal sink counts (VERDICT r3 next-round #5). Auto-broadcast is
-    disabled so the planner cannot silently re-broadcast the small test
-    tables and void the shape assertion."""
-    from log_analysis_ai_spark import pipeline
-    from log_analysis_ai_spark.fixtures import gen_transcripts
+def test_assign_plain_frame_matches_oracle(spark, lookups_pdf):
+    """Pass 2 keys each row of the plain frame (no shard_key column) itself:
+    per-turn template_id/template_str/params equal the pandas oracle on
+    fixture turns plus NULL, empty, numeric-only, leading-noise, noise-only
+    and double-space text."""
+    import pandas as pd
 
-    t = spark.createDataFrame(gen_transcripts(60))
-    expect = sorted(map(tuple, pipeline.sink_counts(_routed(t, caches)).collect()))
-    monkeypatch.setattr(pipeline, "BROADCAST_COUNT_LIMIT", 0)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    from log_analysis_ai_spark.config import PipelineConfig
+    from log_analysis_ai_spark.fixtures import gen_transcripts
+    from log_analysis_ai_spark.operators.drain import assign_templates, mine_catalog, with_shard_key
+    from log_analysis_ai_spark.oracle import run_oracle
+
+    pdf = gen_transcripts(40)
+    edge = [None, "", "12345", "3.5 -7 +2", "2024-01-01T10:00:00 cache miss for key 7",
+            "2024-01-01T10:00:00", "cache  miss for key 7", "  lead space 9"]
+    edge_ids = [f"edge{i}" for i in range(len(edge))]
+    pdf = pd.concat([pdf, pdf.iloc[: len(edge)].assign(conv_id=edge_ids, text=edge)])
+    cfg, plain = PipelineConfig(), spark.createDataFrame(pdf)
+    got = assign_templates(plain, mine_catalog(with_shard_key(plain, cfg), cfg), cfg)
+    want = run_oracle(pdf, *lookups_pdf, cfg).turns_parsed
+    cols = ["conv_id", "turn_idx", "template_id", "template_str", "params"]
+
+    def per_turn(rows):
+        return {(c, t): (i, s, dict(p)) for c, t, i, s, p in rows}
+
+    assert per_turn(got.select(*cols).collect()) == per_turn(want[cols].itertuples(index=False))
+
+
+def test_route_is_lazy_broadcast_with_reused_count_exchange(spark):
+    """route() builds its plan without a Spark job or a cache, joins both
+    count tables back by broadcast, and once run, the global counts read the
+    window-count shuffle as a ReusedExchange instead of recounting."""
+    from log_analysis_ai_spark.config import PipelineConfig
+    from log_analysis_ai_spark.fixtures import gen_transcripts
+    from log_analysis_ai_spark.pipeline import route
+
+    enriched = _enriched(spark.createDataFrame(gen_transcripts(60)))
+    sc, group = spark.sparkContext, "route-build"
+    sc.setJobGroup(group, "route")
     try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        routed = _routed(t, caches)
-        plan = _plan(routed)
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-        got = sorted(map(tuple, pipeline.sink_counts(routed).collect()))
+        routed = route(enriched, PipelineConfig())
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert got == expect
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    plan = _plan(routed)
+    assert "InMemoryRelation" not in plan
+    joins = [l.lstrip(" :+-").split("#")[0] for l in plan.splitlines() if "Inner" in l]
+    assert joins == ["BroadcastHashJoin [template_id", "BroadcastHashJoin [window_start"]
+    routed.collect()
+    reused = [l for l in _plan(routed).splitlines() if "ReusedExchange" in l]
+    assert any("Exchange hashpartitioning(window_start" in l for l in reused)
 
 
 def test_emb_neardup_bucket_exchange_ships_no_vectors(spark):

@@ -121,7 +121,7 @@ def test_trending(spark, turns):
     from log_analysis_ai_spark.config import PipelineConfig
     from log_analysis_ai_spark.operators.drain import mine_and_assign
 
-    assigned, _, _ = mine_and_assign(turns, PipelineConfig())
+    assigned, _ = mine_and_assign(turns, PipelineConfig())
     top = Q.trending_templates(assigned, k=5).collect()
     assert len(top) == 5
     assert top[0]["count"] >= top[-1]["count"]

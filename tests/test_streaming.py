@@ -48,7 +48,7 @@ def test_stream_pipeline_matches_batch(spark, tmp_path):
     # streamed assignment == batch assignment (same catalog, pure pass 2)
     from log_analysis_ai_spark.operators.drain import assign_templates
 
-    want = assign_templates(with_shard_key(batch_df, CFG), catalogs, CFG)
+    want = assign_templates(batch_df, catalogs, CFG)
     g = got.select("conv_id", "turn_idx", "template_id").orderBy("conv_id", "turn_idx").collect()
     w = want.select("conv_id", "turn_idx", "template_id").orderBy("conv_id", "turn_idx").collect()
     assert g == w
